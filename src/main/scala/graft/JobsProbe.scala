@@ -29,13 +29,16 @@ object JobsProbe {
     // GRAFT_PROBE_CONF="spark.sql.autoBroadcastJoinThreshold=-1;k2=v2"
     // — e.g. broadcast off to probe the plan shapes of the 100 TB regime,
     // where node-scale frames exceed any broadcast threshold and the
-    // joins go sort-merge.
+    // joins go sort-merge. Values cannot contain ';', and a segment
+    // without '=' fails the probe rather than being dropped silently.
     val builder = GraftSession.builder()
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
+    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(";").foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => builder.config(k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"GRAFT_PROBE_CONF segment '$kv' is not key=value")
+      }
+    })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()

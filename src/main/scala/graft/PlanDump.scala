@@ -25,14 +25,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("docs/PLANS.md")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", shufflePartitions = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans of headline queries " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
+import graft.sources.Artifacts
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash. All shuffle-conscious:
@@ -372,28 +373,24 @@ object Dedup {
     NearDupIndex(cSized, dfs, n)
   }
 
-  /** Persist a [NearDupIndex] under `dir` (sized/ dfs/ + the shingle-width
-    * marker). Strings and integers round-trip parquet bit-exactly, so a
-    * reloaded index serves pairs bit-identical to the in-session build
-    * (DedupSpec round-trip).
+  /** Persist a [NearDupIndex] under `dir` as one [graft.sources.Artifacts]
+    * store (parts sized/ dfs/, the shingle width a manifest param).
+    * Strings and integers round-trip parquet bit-exactly, so a reloaded
+    * index serves pairs bit-identical to the in-session build (DedupSpec
+    * round-trip).
     */
-  def saveNearDupIndex(index: NearDupIndex, dir: String): Unit = {
-    index.sized.write.mode("overwrite").parquet(s"$dir/sized")
-    index.dfs.write.mode("overwrite").parquet(s"$dir/dfs")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_graft_neardup_n.txt"),
-      s"${index.n}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  def saveNearDupIndex(index: NearDupIndex, dir: String): Unit =
+    Artifacts.write(dir, "neardup_index",
+      Seq(Artifacts.Part("sized", index.sized), Artifacts.Part("dfs", index.dfs)),
+      Map("n" -> index.n.toString))
 
   /** Reload [saveNearDupIndex] output — both frames lazy parquet scans;
-    * the shingle width rides the marker so serve-side tokenization of the
-    * delta cannot drift from what the index was built with.
+    * the shingle width rides the manifest so serve-side tokenization of
+    * the delta cannot drift from what the index was built with.
     */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession, dir: String): NearDupIndex = {
-    val n = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_graft_neardup_n.txt")),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-    NearDupIndex(spark.read.parquet(s"$dir/sized"),
-      spark.read.parquet(s"$dir/dfs"), n)
+    val a = Artifacts.load(spark, dir, "neardup_index")
+    NearDupIndex(a("sized"), a("dfs"), a.param("n").toInt)
   }
 
   /** The serve half of [nearDupDelta], against a prebuilt [NearDupIndex]
@@ -934,31 +931,26 @@ object Dedup {
       lshMemberships(v, idCol, planesEff, tables, probes))
   }
 
-  /** Persist an [[EmbedNearDupIndex]] under `dir`: `buckets/` — the
-    * membership store (the corpus-sized artifact) — and `meta/` — one row
-    * of (planes, tables, probes, id_col). Buckets are BIGINT-exact, so a
-    * reloaded index reproduces the in-session pair set bit-for-bit
-    * (DedupSpec round-trip).
+  /** Persist an [[EmbedNearDupIndex]] under `dir` as one
+    * [graft.sources.Artifacts] store: part `buckets/` — the membership
+    * store (the corpus-sized artifact) — with planes, tables, probes and
+    * id_col as manifest params. Buckets are BIGINT-exact, so a reloaded
+    * index reproduces the in-session pair set bit-for-bit (DedupSpec
+    * round-trip).
     */
-  def saveEmbedNearDupIndex(index: EmbedNearDupIndex, dir: String): Unit = {
-    val spark = index.buckets.sparkSession
-    import spark.implicits._
-    index.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
-    Seq((index.planes, index.tables, index.probes, index.idCol))
-      .toDF("planes", "tables", "probes", "id_col")
-      .repartition(1) // one metadata row
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  def saveEmbedNearDupIndex(index: EmbedNearDupIndex, dir: String): Unit =
+    Artifacts.write(dir, "embed_neardup_index", Seq(Artifacts.Part("buckets", index.buckets)),
+      Map("planes" -> index.planes.toString, "tables" -> index.tables.toString,
+        "probes" -> index.probes.toString, "id_col" -> index.idCol))
 
   /** Reload [[saveEmbedNearDupIndex]] output; the bucket store stays a
     * lazy parquet scan (never collected).
     */
   def loadEmbedNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                             dir: String): EmbedNearDupIndex = {
-    val m = spark.read.parquet(s"$dir/meta")
-      .select("planes", "tables", "probes", "id_col").collect()(0)
-    EmbedNearDupIndex(m.getInt(0), m.getInt(1), m.getInt(2), m.getString(3),
-      spark.read.parquet(s"$dir/buckets"))
+    val a = Artifacts.load(spark, dir, "embed_neardup_index")
+    EmbedNearDupIndex(a.param("planes").toInt, a.param("tables").toInt,
+      a.param("probes").toInt, a.param("id_col"), a("buckets"))
   }
 
   /** The serve half of [[embeddingNearDupPairsLsh]], against a prebuilt

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Artifacts
 
 /** Ranked text retrieval over the corpus — the query-side complement of
   * the dedup/vocab family: BM25 scoring against an inverted index built
@@ -96,103 +97,43 @@ object Retrieval {
     Bm25Index(post, dl, dfreq, stats)
   }
 
-  /** Persist a [Bm25Index] under `dir` (postings/ doclens/ dfreq/ stats/).
-    * tf/df/dl/n/avgdl are integer-valued doubles except avgdl — doubles
-    * round-trip parquet bit-exactly, so a reloaded index serves rankings
-    * bit-identical to the in-session one (RetrievalSpec round-trip).
+  /** Persist a [Bm25Index] under `dir` as one [graft.sources.Artifacts]
+    * store (parts postings/ doclens/ dfreq/ stats/; the manifest, written
+    * last, is the commit). tf/df/dl/n/avgdl are integer-valued doubles
+    * except avgdl — doubles round-trip parquet bit-exactly, so a reloaded
+    * index serves rankings bit-identical to the in-session one
+    * (RetrievalSpec round-trip).
     */
   def saveBm25Index(index: Bm25Index, dir: String): Unit =
     saveBm25Index(index, dir, bucketed = false)
 
-  // one bucket spec for the writer and the fresh-session re-registration
-  // (the trade-edge-store / corpus-state rule)
-  private[graft] val indexBuckets = 32
-
   /** `bucketed = true` writes the two term-keyed frames (postings, dfreq)
-    * as BUCKETED tables on `term` instead of loose parquet. A small query
-    * panel broadcasts and never shuffles the postings anyway; the
-    * bucketed layout is for the OTHER serve regime — a large query batch
-    * (re-scoring a corpus slice, offline eval sweeps) whose term join
-    * goes sort-merge: the postings side then reads co-partitioned, and
-    * the exchange that grows with the INDEX (not the queries) vanishes
-    * (PlanSpec gates it). Same marker + catalog re-registration seam as
-    * the curation state store.
+    * bucketed on `term` instead of loose parquet. A small query panel
+    * broadcasts and never shuffles the postings anyway; the bucketed
+    * layout is for the OTHER serve regime — a large query batch
+    * (re-scoring a corpus slice, offline eval sweeps) whose term join goes
+    * sort-merge: the postings side then reads co-partitioned, and the
+    * exchange that grows with the INDEX (not the queries) vanishes
+    * (PlanSpec gates it).
     */
   def saveBm25Index(index: Bm25Index, dir: String, bucketed: Boolean): Unit = {
-    val s = index.postings.sparkSession
-    if (bucketed) {
-      def writeBucketed(df: DataFrame, sub: String): Unit = {
-        val tbl = indexTableName(dir, sub)
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        df.repartition(indexBuckets, col("term"))
-          .write.mode("overwrite")
-          .bucketBy(indexBuckets, "term").sortBy("term")
-          .option("path", s"$dir/$sub").saveAsTable(tbl)
-      }
-      writeBucketed(index.postings, "postings")
-      writeBucketed(index.dfreq, "dfreq")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "_graft_index_buckets.txt"),
-        s"$indexBuckets\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } else {
-      // mode-switch hygiene: a previously bucketed store in this dir left
-      // the bucket marker and (in-session) catalog tables; a plain write
-      // over them would make the next loadBm25Index register CLUSTERED BY
-      // metadata over non-bucketed part files ("Invalid bucket file").
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "_graft_index_buckets.txt"))
-      s.sql(s"DROP TABLE IF EXISTS ${indexTableName(dir, "postings")}")
-      s.sql(s"DROP TABLE IF EXISTS ${indexTableName(dir, "dfreq")}")
-      index.postings.write.mode("overwrite").parquet(s"$dir/postings")
-      index.dfreq.write.mode("overwrite").parquet(s"$dir/dfreq")
-    }
-    index.docLens.write.mode("overwrite").parquet(s"$dir/doclens")
-    index.stats.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-  }
-
-  /** Catalog table name for one bucketed index frame. Sanitizing the dir
-    * to `[a-z0-9_]` alone would collide distinct paths (`/a/b` vs `/a_b`),
-    * and the tableExists short-circuit in [loadBm25Index] would then
-    * silently serve the OTHER store's data — so the raw (pre-sanitize)
-    * dir string's hash is appended to keep distinct dirs distinct.
-    */
-  private[graft] def indexTableName(dir: String, sub: String): String = {
-    val sanitized = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val rawHash = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir))
-    ("graft_bm25_" + sub + "_" + sanitized + "_" + rawHash).toLowerCase
+    val byTerm = Option.when(bucketed)("term")
+    Artifacts.write(dir, "bm25_index", Seq(
+      Artifacts.Part("postings", index.postings, byTerm),
+      Artifacts.Part("dfreq", index.dfreq, byTerm),
+      Artifacts.Part("doclens", index.docLens),
+      Artifacts.Part("stats", index.stats.coalesce(1))))
   }
 
   /** Reload [saveBm25Index] output — every frame stays a lazy scan
     * (nothing collects to the driver; the one-row stats frame is
-    * broadcast by the serve plan exactly like the in-session build). A
-    * bucketed store comes back as catalog tables (re-registered from the
-    * marker in a fresh session) so the term partitioning is visible.
+    * broadcast by the serve plan exactly like the in-session build), and
+    * a bucketed store keeps its term partitioning visible. Throws
+    * FileNotFoundException when `dir` holds no committed index.
     */
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession, dir: String): Bm25Index = {
-    val marker = java.nio.file.Paths.get(dir, "_graft_index_buckets.txt")
-    val (post, dfreq) =
-      if (java.nio.file.Files.exists(marker)) {
-        val buckets = new String(java.nio.file.Files.readAllBytes(marker),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-        def registered(sub: String): DataFrame = {
-          val tbl = indexTableName(dir, sub)
-          if (!spark.catalog.tableExists(tbl)) {
-            val cols = spark.read.parquet(s"$dir/$sub").schema
-              .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-            spark.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
-              s"CLUSTERED BY (term) SORTED BY (term) " +
-              s"INTO $buckets BUCKETS LOCATION '$dir/$sub'")
-          }
-          spark.table(tbl)
-        }
-        (registered("postings"), registered("dfreq"))
-      } else
-        (spark.read.parquet(s"$dir/postings"), spark.read.parquet(s"$dir/dfreq"))
-    Bm25Index(post,
-      spark.read.parquet(s"$dir/doclens"),
-      dfreq,
-      spark.read.parquet(s"$dir/stats"))
+    val a = Artifacts.load(spark, dir, "bm25_index")
+    Bm25Index(a("postings"), a("doclens"), a("dfreq"), a("stats"))
   }
 
   /** Reciprocal Rank Fusion (Cormack et al., SIGIR 2009) of two ranked

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.Artifacts
 
 /** Vector similarity search over an embedding column (`array<float>`).
   *
@@ -435,24 +436,32 @@ object Similarity {
       .select(col("query_id"), col("corpus_id"), col("sim"), col("rnk"))
   }
 
-  /** Persist trained IVF centroids as a parquet table (cell, centroid).
+  /** Persist trained IVF centroids under `dir` as one
+    * [graft.sources.Artifacts] store (part centroids/: cell, centroid).
     * Floats round-trip parquet bit-exactly, so rankings served from a
     * reloaded table are bit-identical to the in-session index
     * (SimilaritySpec round-trip).
     */
   def saveCentroids(centroids: Array[Array[Float]], dir: String,
-                    spark: org.apache.spark.sql.SparkSession): Unit = {
+                    spark: org.apache.spark.sql.SparkSession): Unit =
+    Artifacts.write(dir, "ivf_centroids", Seq(centroidsPart(centroids, spark)))
+
+  private def centroidsPart(centroids: Array[Array[Float]],
+                            spark: org.apache.spark.sql.SparkSession): Artifacts.Part = {
     import spark.implicits._
-    centroids.zipWithIndex.map { case (cent, cell) => (cell, cent.toSeq) }
+    Artifacts.Part("centroids", centroids.zipWithIndex.map { case (cent, cell) => (cell, cent.toSeq) }
       .toSeq.toDF("cell", "centroid")
-      .repartition(1) // nlist × dim floats — one small file
-      .write.mode("overwrite").parquet(dir)
+      .repartition(1)) // nlist × dim floats — one small file
   }
 
   /** Reload [saveCentroids] output; cell ids index the returned array. */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                     dir: String): Array[Array[Float]] =
-    spark.read.parquet(dir).orderBy(col("cell")).collect()
+    centroidsOf(Artifacts.load(spark, dir, "ivf_centroids"))
+
+  // the by-design collect: nlist centroids are driver-side probe state
+  private def centroidsOf(a: Artifacts.Loaded): Array[Array[Float]] =
+    a("centroids").orderBy(col("cell")).collect()
       .map(r => r.getSeq[Float](1).toArray)
 
   /** Cosine of a row vector against a driver-side centroid — primitive loop,
@@ -883,38 +892,43 @@ object Similarity {
       .select(col(idCol).as("corpus_id"), col("codes"), col("vnorm").as("cn")))
   }
 
-  /** Persist a [PqIndex] under `dir`: `codes/` — the (corpus_id, codes,
-    * cn) scoring store, the thing that must stay resident at 100 TB — and
-    * `codebooks/` — the m × ksub × dsub centroid table (tiny). This is
-    * the production shape: build once (trainPq + pqEncode are the corpus
-    * pass), persist, then serve every query batch from the reloaded
-    * artifact — [SimilaritySpec] pins that the served ranking is
-    * bit-identical to the in-session index (floats round-trip parquet
-    * exactly; the ADC scan reads the same codes).
+  /** Persist a [PqIndex] under `dir` as one [graft.sources.Artifacts]
+    * store: part `codes/` — the (corpus_id, codes, cn) scoring store, the
+    * thing that must stay resident at 100 TB — and part `codebooks/` — the
+    * m × ksub × dsub centroid table (tiny). This is the production shape:
+    * build once (trainPq + pqEncode are the corpus pass), persist, then
+    * serve every query batch from the reloaded artifact — [SimilaritySpec]
+    * pins that the served ranking is bit-identical to the in-session index
+    * (floats round-trip parquet exactly; the ADC scan reads the same codes).
     */
-  def savePqIndex(index: PqIndex, dir: String): Unit = {
+  def savePqIndex(index: PqIndex, dir: String): Unit =
+    Artifacts.write(dir, "pq_index", pqParts(index))
+
+  private def pqParts(index: PqIndex): Seq[Artifacts.Part] = {
     val spark = index.codes.sparkSession
     import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
-    index.codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (cent, cell) => (j, cell, cent.toSeq) }
-    }.toSeq.toDF("j", "cell", "centroid")
-      .repartition(1) // m × ksub × dsub floats — one small file
-      .write.mode("overwrite").parquet(s"$dir/codebooks")
+    Seq(Artifacts.Part("codes", index.codes),
+      Artifacts.Part("codebooks", index.codebooks.zipWithIndex.flatMap { case (book, j) =>
+        book.zipWithIndex.map { case (cent, cell) => (j, cell, cent.toSeq) }
+      }.toSeq.toDF("j", "cell", "centroid")
+        .repartition(1))) // m × ksub × dsub floats — one small file
   }
 
   /** Reload [savePqIndex] output. The codes frame stays a lazy parquet
     * scan (the 100 TB store is served, never collected); only the
     * codebook table is collected, in (j, cell) order.
     */
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex = {
-    val books = spark.read.parquet(s"$dir/codebooks")
+  def loadPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): PqIndex =
+    pqIndexOf(Artifacts.load(spark, dir, "pq_index"))
+
+  private def pqIndexOf(a: Artifacts.Loaded): PqIndex = {
+    val books = a("codebooks")
       .orderBy(col("j"), col("cell")).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2))
       .toArray
-    PqIndex(books, spark.read.parquet(s"$dir/codes"))
+    PqIndex(books, a("codes"))
   }
 
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -1049,14 +1063,16 @@ object Similarity {
     pqRankTail(scored, corpus, queries, k, rerank, idCol, vecCol)
   }
 
-  /** Persist/reload the composed index: centroids/ + the [savePqIndex]
-    * layout (codes carry their `cell` column through the round-trip).
+  /** Persist/reload the composed index as one [graft.sources.Artifacts]
+    * store: centroids/ + the [savePqIndex] parts (codes carry their `cell`
+    * column through the round-trip).
     */
-  def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit = {
-    saveCentroids(index.centroids, s"$dir/centroids", index.pq.codes.sparkSession)
-    savePqIndex(index.pq, dir)
-  }
+  def saveIvfPqIndex(index: IvfPqIndex, dir: String): Unit =
+    Artifacts.write(dir, "ivf_pq_index",
+      centroidsPart(index.centroids, index.pq.codes.sparkSession) +: pqParts(index.pq))
 
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqIndex =
-    IvfPqIndex(loadCentroids(spark, s"$dir/centroids"), loadPqIndex(spark, dir))
+  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String): IvfPqIndex = {
+    val a = Artifacts.load(spark, dir, "ivf_pq_index")
+    IvfPqIndex(centroidsOf(a), pqIndexOf(a))
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Expressions, TextFns}
 import graft.operators.{Dedup, Pack, Split}
+import graft.sources.Artifacts
 
 /** The operators composed into the pipeline they exist for: raw crawl →
   * training sequences. Each stage is one of the library's scale-shaped
@@ -555,133 +556,58 @@ object Curation {
       nearDupIndex = index)
   }
 
-  /** Persist a [CorpusState] under `dir` (docs/ fingerprints/
-    * shard_offsets/) — the artifact a batch run leaves behind and the next
-    * day's [curateDelta] resumes from. This is the REAL storage round-trip
-    * [stateOf]'s localCheckpoint stands in for: docs and fingerprints are
-    * corpus-sized distributed tables (never driver-resident), shard
-    * offsets are `packShards` rows. Pass `bucketIdCol` (the overload
-    * below) to write the corpus-sized tables bucketed on their join keys.
+  /** Persist a [CorpusState] under `dir` as one [graft.sources.Artifacts]
+    * store (parts docs/ fingerprints/ shard_offsets/; the manifest,
+    * written last, is the commit) — the artifact a batch run leaves behind
+    * and the next day's [curateDelta] resumes from. This is the REAL
+    * storage round-trip [stateOf]'s localCheckpoint stands in for: docs
+    * and fingerprints are corpus-sized distributed tables (never
+    * driver-resident), shard offsets are `packShards` rows. Pass
+    * `bucketIdCol` (the overload below) to write the corpus-sized tables
+    * bucketed on their join keys.
     */
   def saveState(state: CorpusState, dir: String): Unit =
     saveState(state, dir, bucketIdCol = None)
 
-  // ONE bucket spec shared by the writer and loadState's fresh-session
-  // re-registration (the trade-edge-store rule: divergence would silently
-  // register stale metadata over mismatched files). 32 matches
-  // shuffle.partitions, so the delta side's one shuffle lands on the same
-  // partitioning the state buckets already have.
-  private[graft] val stateBuckets = 32
-
   /** With `bucketIdCol = Some(id)`, the corpus-sized state tables are
-    * written as BUCKETED tables — docs on the id, fingerprints on `fp` —
-    * instead of loose parquet: curateDelta anti-joins the corpus
-    * fingerprint index (and id-joins the docs) once per delta run, and a
-    * plain parquet scan re-shuffles the state side every run, the
-    * shuffle that grows with the CORPUS while the delta stays a day
-    * wide. A bucketed scan reports its hash partitioning and those
-    * exchanges vanish (PlanSpec gates it) — at cluster scale this is
-    * "bucket the state tables by their join keys", decided once at
-    * batch-publish time and amortized over every delta that follows.
+    * written bucketed — docs on the id, fingerprints on `fp` — instead of
+    * loose parquet: curateDelta anti-joins the corpus fingerprint index
+    * (and id-joins the docs) once per delta run, and a plain parquet scan
+    * re-shuffles the state side every run, the shuffle that grows with
+    * the CORPUS while the delta stays a day wide. A bucketed scan reports
+    * its hash partitioning and those exchanges vanish (PlanSpec gates
+    * it) — at cluster scale this is "bucket the state tables by their
+    * join keys", decided once at batch-publish time and amortized over
+    * every delta that follows.
+    *
+    * The near-dup index is its own artifact under `neardup_index/`,
+    * written after the state commits: the save clears the whole state
+    * directory first, so a state saved without an index leaves none, and
+    * an interrupted index save loads as `nearDupIndex = None` (curateDelta
+    * then derives pairs from the corpus) — never as an older corpus's
+    * index.
     */
   def saveState(state: CorpusState, dir: String,
                 bucketIdCol: Option[String]): Unit = {
-    bucketIdCol match {
-      case Some(idCol) =>
-        val s = state.docs.sparkSession
-        def writeBucketed(df: DataFrame, sub: String, key: String): Unit = {
-          val tbl = stateTableName(dir, sub)
-          s.sql(s"DROP TABLE IF EXISTS $tbl")
-          // repartition on the bucket column first: writer hash ==
-          // bucketing hash, so each task holds exactly one bucket and the
-          // store is `stateBuckets` files, not fragments per task×bucket
-          df.repartition(stateBuckets, col(key))
-            .write.mode("overwrite")
-            .bucketBy(stateBuckets, key).sortBy(key)
-            .option("path", s"$dir/$sub").saveAsTable(tbl)
-        }
-        writeBucketed(state.docs, "docs", idCol)
-        writeBucketed(state.fingerprints, "fingerprints", "fp")
-        // marker so a fresh session's loadState knows to re-register the
-        // catalog tables (bucket metadata lives in the catalog, not the
-        // files — spark.read.parquet would silently drop it)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "_graft_state_buckets.txt"),
-          s"$idCol\n$stateBuckets\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None =>
-        // mode-switch hygiene (same hazard as the BM25 store): a prior
-        // bucketed save in this dir left the marker and catalog tables;
-        // writing plain parquet under them would make the next loadState
-        // register bucket metadata over non-bucketed files.
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(dir, "_graft_state_buckets.txt"))
-        val s = state.docs.sparkSession
-        s.sql(s"DROP TABLE IF EXISTS ${stateTableName(dir, "docs")}")
-        s.sql(s"DROP TABLE IF EXISTS ${stateTableName(dir, "fingerprints")}")
-        state.docs.write.mode("overwrite").parquet(s"$dir/docs")
-        state.fingerprints.write.mode("overwrite").parquet(s"$dir/fingerprints")
-    }
-    state.shardOffsets.coalesce(1).write.mode("overwrite").parquet(s"$dir/shard_offsets")
-    // the near-dup prefix-posting index rides the same artifact when the
-    // batch built one (mode hygiene: a state saved WITHOUT the index must
-    // erase a stale one, or the next loadState would serve an index from
-    // an older corpus)
-    state.nearDupIndex match {
-      case Some(ix) => Dedup.saveNearDupIndex(ix, s"$dir/neardup_index")
-      case None => java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, "neardup_index", "_graft_neardup_n.txt"))
-    }
-  }
-
-  /** Catalog table name for one bucketed state frame. The sanitize step
-    * alone maps distinct dirs (`/a/b` vs `/a_b`) to one name and the
-    * tableExists short-circuit in [loadState] would then silently return
-    * the OTHER store's frames — the raw dir's hash disambiguates.
-    */
-  private[graft] def stateTableName(dir: String, sub: String): String = {
-    val sanitized = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val rawHash = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir))
-    ("graft_state_" + sub + "_" + sanitized + "_" + rawHash).toLowerCase
+    Artifacts.write(dir, "corpus_state", Seq(
+      Artifacts.Part("docs", state.docs, bucketIdCol),
+      Artifacts.Part("fingerprints", state.fingerprints, bucketIdCol.map(_ => "fp")),
+      Artifacts.Part("shard_offsets", state.shardOffsets.coalesce(1))))
+    state.nearDupIndex.foreach(Dedup.saveNearDupIndex(_, s"$dir/neardup_index"))
   }
 
   /** Reload [saveState] output — every frame a lazy scan; the delta
     * pipeline's multiple references re-read storage rather than holding
     * the corpus resident, exactly as a production resume would. A store
-    * written bucketed comes back as catalog tables (re-registered from
-    * the marker if this is a fresh session) so its hash partitioning is
-    * visible to the planner; a loose-parquet store scans as before.
+    * written bucketed comes back as catalog tables so its hash
+    * partitioning is visible to the planner. Throws FileNotFoundException
+    * when `dir` holds no committed state.
     */
   def loadState(spark: org.apache.spark.sql.SparkSession, dir: String): CorpusState = {
-    val marker = java.nio.file.Paths.get(dir, "_graft_state_buckets.txt")
-    val (docs, fps) =
-      if (java.nio.file.Files.exists(marker)) {
-        val Array(idCol, buckets) =
-          new String(java.nio.file.Files.readAllBytes(marker),
-            java.nio.charset.StandardCharsets.UTF_8).trim.split("\n")
-        def registered(sub: String, key: String): DataFrame = {
-          val tbl = stateTableName(dir, sub)
-          if (!spark.catalog.tableExists(tbl)) {
-            // columns from the parquet footer, bucket spec from the marker
-            // — the registration can't drift from what the writer produced
-            val cols = spark.read.parquet(s"$dir/$sub").schema
-              .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-            spark.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) " +
-              s"INTO $buckets BUCKETS LOCATION '$dir/$sub'")
-          }
-          spark.table(tbl)
-        }
-        (registered("docs", idCol), registered("fingerprints", "fp"))
-      } else
-        (spark.read.parquet(s"$dir/docs"), spark.read.parquet(s"$dir/fingerprints"))
-    val ixMarker = java.nio.file.Paths.get(dir, "neardup_index", "_graft_neardup_n.txt")
-    CorpusState(docs, fps,
-      shardOffsets = spark.read.parquet(s"$dir/shard_offsets"),
-      nearDupIndex =
-        if (java.nio.file.Files.exists(ixMarker))
-          Some(Dedup.loadNearDupIndex(spark, s"$dir/neardup_index"))
-        else None)
+    val a = Artifacts.load(spark, dir, "corpus_state")
+    val ixDir = s"$dir/neardup_index"
+    CorpusState(a("docs"), a("fingerprints"), a("shard_offsets"),
+      Option.when(Artifacts.exists(spark, ixDir))(Dedup.loadNearDupIndex(spark, ixDir)))
   }
 
   /** INCREMENTAL curation: one day's `delta` batch through the same

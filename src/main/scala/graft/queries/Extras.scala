@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Artifacts, Tables}
 import graft.operators.{AsOf, Split, TableDiff}
 import graft.pipeline.Silver
 
@@ -674,8 +674,8 @@ object Extras {
       .distinct()
   }
 
-  /** The store is a BUCKETED table (32 buckets on src, matching
-    * shuffle.partitions), not loose parquet: the power iteration joins
+  /** The store is one [graft.sources.Artifacts] store whose single part
+    * is BUCKETED on src, not loose parquet: the power iteration joins
     * edges on src and groups them on src (outdegree) once PER ITERATION
     * per entry, and a plain parquet scan re-shuffles the edge side every
     * time — the shuffle that grows linearly with the corpus and is why
@@ -684,46 +684,23 @@ object Extras {
     * (PlanSpec gates it); at cluster scale this is exactly "bucket the
     * edge table by src so iterations co-locate", the layout decision made
     * once at store-build time. The catalog entry is per-session metadata
-    * over the same temp files, so a later session re-registers the
-    * external table instead of rebuilding (bucket ids ride the file
-    * names the bucketed writer produced).
+    * over the same temp files, so a later session re-registers it from
+    * the manifest instead of rebuilding.
     */
-  // ONE bucket spec shared by the writer and the fresh-session
-  // re-registration below — if they ever diverged, a later session would
-  // silently register stale metadata over mismatched files (parquet
-  // name-based resolution returns nulls rather than erroring)
-  private val edgeBuckets = 32
-  private val edgeBucketCol = "src"
-
   private def tradeGraph(s: SparkSession, d: String): DataFrame = {
-    val tbl = ("graft_trade_edges_" + d.replaceAll("[^a-zA-Z0-9]", "_")).toLowerCase
-    val path = edgeStore.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_trade_edges_")
-        .toString
-      graft.sources.Tables.deleteOnExit(dir) // temp store dies with the JVM
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      // repartition on the bucket column first: writer hash == bucketing
-      // hash (both Murmur3 on src), so with numPartitions == numBuckets
-      // each task holds exactly one bucket and the store is 32 files, not
-      // up to 32 tasks × 32 buckets of fragments
-      buildTradeEdges(s, d).repartition(edgeBuckets, col(edgeBucketCol))
-        .write.mode("overwrite")
-        .bucketBy(edgeBuckets, edgeBucketCol).sortBy(edgeBucketCol)
-        .option("path", dir).saveAsTable(tbl)
+    val dir = edgeStore.computeIfAbsent(d, _ => {
+      val dir = java.nio.file.Files.createTempDirectory("graft_trade_edges_").toString
+      Tables.deleteOnExit(dir) // temp store dies with the JVM
+      Artifacts.write(dir, "trade_edges",
+        Seq(Artifacts.Part("edges", buildTradeEdges(s, d), Some("src"))))
       dir
     })
-    if (!s.catalog.tableExists(tbl)) {
-      // columns derived from the builder (schema-only, no job), bucket spec
-      // from the shared constants — the registration can't drift from the
-      // writer above
-      val cols = buildTradeEdges(s, d).schema
-        .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-      s.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
-        s"CLUSTERED BY ($edgeBucketCol) SORTED BY ($edgeBucketCol) " +
-        s"INTO $edgeBuckets BUCKETS LOCATION '$path'")
-    }
-    s.table(tbl).select(col("src"), col("dst"))
+    Artifacts.load(s, dir, "trade_edges")("edges").select(col("src"), col("dst"))
   }
+
+  /** Catalog table of the trade-edge store built for fixture dir `d`. */
+  private[graft] def tradeEdgeTable(d: String): String =
+    Artifacts.tableName(edgeStore.get(d), "edges")
 
   /** q50s/q53s's residue-class panel subgraph: the bucketed edge store
     * filtered to edges whose BOTH endpoint keys sit in the % 31 == 7

@@ -272,24 +272,31 @@ class CurationSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_state_ms").toString
     val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
     val state = Curation.stateOf(batch, "doc_id", "text")
-    Curation.saveState(state, dir, bucketIdCol = Some("doc_id"))
-    val marker = java.nio.file.Paths.get(dir, "_graft_state_buckets.txt")
-    assert(java.nio.file.Files.exists(marker))
-    // the hazard: re-save plain over the same dir — without the hygiene,
-    // the stale marker makes loadState register bucket metadata over
-    // non-bucketed part files (wrong reads or 'Invalid bucket file')
+    val indexed = state.copy(nearDupIndex =
+      Some(graft.operators.Dedup.nearDupIndexOf(state.docs, "doc_id", "text", 3)))
+    Curation.saveState(indexed, dir, bucketIdCol = Some("doc_id"))
+    def bucketedRead(st: Curation.CorpusState): Boolean =
+      st.docs.queryExecution.executedPlan.toString.contains("Bucketed")
+    assert(bucketedRead(Curation.loadState(spark, dir)))
+    // the hazard: re-save plain over the same dir — the old generation's
+    // bucket metadata must not cover the new non-bucketed part files
+    // (wrong reads or 'Invalid bucket file'), and its index must not outlive it
     Curation.saveState(state, dir, bucketIdCol = None)
-    assert(!java.nio.file.Files.exists(marker), "stale bucket marker survived a plain save")
-    assert(!spark.catalog.tableExists(Curation.stateTableName(dir, "docs")) &&
-      !spark.catalog.tableExists(Curation.stateTableName(dir, "fingerprints")),
+    assert(!spark.catalog.tableExists(graft.sources.Artifacts.tableName(dir, "docs")) &&
+      !spark.catalog.tableExists(graft.sources.Artifacts.tableName(dir, "fingerprints")),
       "stale catalog tables survived a plain save")
+    assert(!new java.io.File(s"$dir/neardup_index").exists(),
+      "a state saved without an index left an orphaned neardup_index/")
     val reloaded = Curation.loadState(spark, dir)
+    assert(!bucketedRead(reloaded), "plain state reloaded as a bucketed read")
+    assert(reloaded.nearDupIndex.isEmpty)
     assert(reloaded.docs.count() === state.docs.count())
   }
 
   test("stateTableName: distinct dirs that sanitize identically stay distinct") {
-    assert(Curation.stateTableName("/tmp/a/b", "docs") !==
-      Curation.stateTableName("/tmp/a_b", "docs"))
+    // corpus-state parts are named by the shared artifact namer
+    assert(graft.sources.Artifacts.tableName("/tmp/a/b", "docs") !==
+      graft.sources.Artifacts.tableName("/tmp/a_b", "docs"))
   }
 
   // --- boilerplate span gate (Lee et al. 2021) ---

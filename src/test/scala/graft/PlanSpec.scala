@@ -411,7 +411,7 @@ class PlanSpec extends SparkSpec {
   test("trade-edge store is bucketed: iteration join + outdegree leave the edge side unshuffled") {
     // force the store build + catalog registration through the real entry
     SparkEntry.queries("q50p_pagerank_prod")(spark, sf).collect()
-    val tbl = ("graft_trade_edges_" + sf.replaceAll("[^a-zA-Z0-9]", "_")).toLowerCase
+    val tbl = graft.queries.Extras.tradeEdgeTable(sf)
     val e = spark.table(tbl)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -441,7 +441,7 @@ class PlanSpec extends SparkSpec {
     // the suite naturally — simulate it: DROP the EXTERNAL table
     // (metadata only, files retained) and let the entry re-register
     SparkEntry.queries("q50p_pagerank_prod")(spark, sf).collect() // ensure built
-    val tbl = ("graft_trade_edges_" + sf.replaceAll("[^a-zA-Z0-9]", "_")).toLowerCase
+    val tbl = graft.queries.Extras.tradeEdgeTable(sf)
     val before = spark.table(tbl).count()
     spark.sql(s"DROP TABLE $tbl")
     val r = SparkEntry.queries("q50p_pagerank_prod")(spark, sf).collect()
@@ -518,7 +518,7 @@ class PlanSpec extends SparkSpec {
       // (production runs at 32; the suite session runs at 4, which would
       // legitimately add a second delta-side exchange to reach 32)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", Curation.stateBuckets.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", graft.sources.Artifacts.Buckets.toString)
       // dedupDelta's shape: delta fingerprint window, then anti-join the
       // corpus fingerprint index — the state side must ride its buckets
       val q = graft.operators.Dedup.dedupDelta(delta, loaded.fingerprints, "text", "doc_id")
@@ -537,9 +537,9 @@ class PlanSpec extends SparkSpec {
         !pa.contains("Exchange hashpartitioning(doc_id"),
         s"state docs table lost its bucketing:\n$pa")
       // fresh-session path: DROP the external tables (metadata only) and
-      // let loadState re-register from the marker over the same files
+      // let loadState re-register from the manifest over the same files
       Seq("docs", "fingerprints").foreach { sub =>
-        spark.sql("DROP TABLE " + Curation.stateTableName(dir, sub))
+        spark.sql("DROP TABLE " + graft.sources.Artifacts.tableName(dir, sub))
       }
       val again = Curation.loadState(spark, dir)
       assert(again.docs.count() === 300)

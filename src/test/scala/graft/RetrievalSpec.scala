@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
+import graft.sources.Artifacts
 
 class RetrievalSpec extends SparkSpec {
   import spark.implicits._
@@ -134,9 +135,9 @@ class RetrievalSpec extends SparkSpec {
         !p.contains("Exchange hashpartitioning(term"),
         s"postings lost their term bucketing:\n$p")
       // fresh-session path: drop the external tables, loadBm25Index
-      // re-registers from the marker over the same files
-      spark.sql("DROP TABLE " + Retrieval.indexTableName(dir, "postings"))
-      spark.sql("DROP TABLE " + Retrieval.indexTableName(dir, "dfreq"))
+      // re-registers from the manifest over the same files
+      spark.sql("DROP TABLE " + Artifacts.tableName(dir, "postings"))
+      spark.sql("DROP TABLE " + Artifacts.tableName(dir, "dfreq"))
       val again = Retrieval.loadBm25Index(spark, dir)
       val servedAgain = Retrieval.bm25TopKIndexed(again, q, k = 5)
         .as[(Long, Long, Double, Int)].collect().toSet
@@ -157,16 +158,17 @@ class RetrievalSpec extends SparkSpec {
     val q = Seq((7L, "garlic oil")).toDF("query_id", "qtext")
     val built = Retrieval.bm25Index(corpus)
     Retrieval.saveBm25Index(built, dir, bucketed = true)
-    val marker = java.nio.file.Paths.get(dir, "_graft_index_buckets.txt")
-    assert(java.nio.file.Files.exists(marker))
-    // re-save plain over the same dir: without the hygiene, the stale
-    // marker registers CLUSTERED BY tables over plain part files
+    def bucketedRead(ix: Retrieval.Bm25Index): Boolean =
+      ix.postings.queryExecution.executedPlan.toString.contains("Bucketed")
+    assert(bucketedRead(Retrieval.loadBm25Index(spark, dir)))
+    // re-save plain over the same dir: the new manifest must not let the
+    // old generation's CLUSTERED BY tables cover plain part files
     Retrieval.saveBm25Index(built, dir, bucketed = false)
-    assert(!java.nio.file.Files.exists(marker), "stale bucket marker survived a plain save")
-    assert(!spark.catalog.tableExists(Retrieval.indexTableName(dir, "postings")) &&
-      !spark.catalog.tableExists(Retrieval.indexTableName(dir, "dfreq")),
+    assert(!spark.catalog.tableExists(Artifacts.tableName(dir, "postings")) &&
+      !spark.catalog.tableExists(Artifacts.tableName(dir, "dfreq")),
       "stale catalog tables survived a plain save")
     val reloaded = Retrieval.loadBm25Index(spark, dir)
+    assert(!bucketedRead(reloaded), "plain store reloaded as a bucketed read")
     val served = Retrieval.bm25TopKIndexed(reloaded, q, k = 5)
       .as[(Long, Long, Double, Int)].collect().toSet
     val direct = Retrieval.bm25TopK(corpus, q, k = 5)
@@ -175,8 +177,9 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("indexTableName: distinct dirs that sanitize identically stay distinct") {
-    assert(Retrieval.indexTableName("/tmp/a/b", "postings") !==
-      Retrieval.indexTableName("/tmp/a_b", "postings"))
+    // BM25 parts are named by the shared artifact namer
+    assert(Artifacts.tableName("/tmp/a/b", "postings") !==
+      Artifacts.tableName("/tmp/a_b", "postings"))
   }
 
   test("hashEmbedding: deterministic, dimension-correct, text-sensitive") {
