@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 import graft.sources.Artifacts
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
   * Jaccard, MinHash+LSH, SimHash. All shuffle-conscious:
@@ -14,11 +16,6 @@ import graft.sources.Artifacts
   *     exactly within buckets.
   */
 object Dedup {
-
-  // per-call disambiguator for durable-checkpoint subdirs
-  // (connectedComponents reliable mode — see PageRank.durableCallSeq)
-  private[operators] val durableCallSeq =
-    new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Exact dedup: keep the lowest-id row per identical content. One
     * map-side-combinable aggregate; no window needed.
@@ -464,7 +461,8 @@ object Dedup {
     * small dense clusters (diameter rarely exceeds a handful), so the
     * round count is tiny and data-independent of corpus size; each round
     * is one equi-join + min-aggregate over the PAIRED nodes only (not the
-    * corpus), with `localCheckpoint` truncating the iterative lineage.
+    * corpus), and each round's label frame crosses a cache cut
+    * ([Bridge.materialize]) that bounds the logical lineage.
     * The O(log n)-round large-star/small-star variant (Kiveris et al.,
     * "Connected Components in MapReduce", 2014) only pays off on
     * long-chain graphs that near-dup sets don't produce.
@@ -484,83 +482,49 @@ object Dedup {
     // re-shuffling the edge frame every round. The cached explicit-count
     // repartition keeps HashPartitioning(dst) visible, so rounds shuffle
     // only the label frame (+ the groupBy(src), the round's real shuffle);
-    // the cache also keeps a derived pair graph from recomputing per round
-    // — the job the eager checkpoint did here before.
+    // the cache also keeps a derived pair graph from recomputing per round.
     val parts = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct().repartition(parts, col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     // reliable mode: the round's label frame lands on durable storage
     // (ping-pong slots bound disk at two label-frame snapshots); the write
     // is the round's materializing job and the changed-count reads the
-    // files back — same one-action-per-round shape as the lazy checkpoint
-    // per-call subdir: the returned labels frame is a lazy scan of the
-    // final slot, and a second durable call sharing checkpointDir must not
-    // overwrite it before the caller consumes it (same fix as PageRank)
-    val callDir = checkpointDir.map(d =>
-      s"$d/cc_${Dedup.durableCallSeq.incrementAndGet()}")
-    def durable(df: DataFrame, slot: String): DataFrame = callDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/$slot")
-        df.sparkSession.read.parquet(s"$dir/$slot")
-      case None => df
-    }
-    // Local mode (r17): per-round label frames persist + materialize +
-    // Bridge.cutLineage — the PageRank iteration's shape (VERDICT r16 #5).
-    // A localCheckpoint'd label frame scans back as UnknownPartitioning
-    // under AQE, so every round re-shuffled the label frame TWICE: into
-    // the edge join (edges are hash(dst)-partitioned; labels must come
-    // hash(id)) and into the label⨝nbrMin update join. The flat LogicalRDD
-    // view keeps the frame's hash(id) outputPartitioning — established
-    // once by the init repartition and preserved by each round's left
-    // join (output partitioning = left side's) — so both per-round label
-    // exchanges drop out and only the groupBy(src) aggregation shuffle,
-    // the round's one fundamental exchange, remains. The label frame is
-    // corpus-PAIRED-node-sized; at 100 TB this removes 2 node-frame
-    // shuffles per round, same argument as the PageRank fix.
-    // the still-cached round's frame; released as soon as the next round
-    // (or the final copy-out) has consumed it, and on every exit path
-    var liveCache: Option[DataFrame] = None
-    def releaseCache(): Unit = {
-      liveCache.foreach(_.unpersist(blocking = false))
-      liveCache = None
-    }
-    // persist + materialize + cut + swap: `materialize` runs the round's
-    // ONE action against the just-persisted frame (filling the cache as a
-    // side effect), so the convergence count keeps riding the
-    // materialization — one driver round-trip per round, as before
-    def cutWith(df: DataFrame)(materialize: DataFrame => Unit): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      try materialize(p)
-      catch { case t: Throwable => p.unpersist(blocking = false); throw t }
-      releaseCache()
-      liveCache = Some(p)
-      org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
-    }
-    // explicit-count repartition on id (AQE would otherwise coalesce the
-    // distinct's output to a data-dependent partition count that cannot
-    // match the edge frame's `parts`) — one node-frame shuffle that buys
-    // exchange-free label joins for every round; see PageRank.nodeFrame.
-    // The repartition runs BEFORE the component projection: over the
-    // projection the optimizer canonicalizes the repartition key onto the
-    // `component` alias (id ≡ component at init), and the captured
-    // partitioning hash(component) then fails the round join's hash(id)
-    // requirement by exprId — one avoidable exchange on round 1 (measured
-    // via the PartProbe/JobsProbe broadcast-off dumps).
-    val ids = edges.select(col("src").as("id")).distinct()
-    val init = (if (checkpointDir.isEmpty) ids.repartition(parts, col("id")) else ids)
-      .withColumn("component", col("id"))
-    var labels = durable(init, "labels_init")
-    if (checkpointDir.isEmpty)
-      // init's materializing action is a NOOP-SINK write, not a count —
-      // count plans a two-stage aggregate (partial + single-partition
-      // final exchange) for a value nobody reads; the noop write computes
-      // every column in ONE job (guide §1.4)
-      labels = cutWith(labels)(_.write.format("noop").mode("overwrite").save())
-    var changed = 1L
-    var iter = 0
+    // files back — same one-action-per-round shape as the cache cut
+    val callDir = checkpointDir.map(Bridge.durableCallDir(_, "cc"))
+    // local mode: the live round's cache cut. Its view keeps the label
+    // frame's hash(id) partitioning — established once by the init
+    // repartition and preserved by each round's left join — so the edge
+    // join and the label⨝nbrMin update join stay exchange-free on the
+    // label side; only the groupBy(src) shuffle remains per round.
+    var live: Option[Bridge.Cut] = None
     try {
+      val ids = edges.select(col("src").as("id")).distinct()
+      var labels = callDir match {
+        case Some(dir) => Bridge.durable(ids.withColumn("component", col("id")), s"$dir/labels_init")
+        case None =>
+          // explicit-count repartition on id (AQE would otherwise coalesce
+          // the distinct's output to a data-dependent partition count that
+          // cannot match the edge frame's `parts`). It runs BEFORE the
+          // component projection: over the projection the optimizer
+          // canonicalizes the key onto the `component` alias (id ≡
+          // component at init), and hash(component) then fails the round
+          // join's hash(id) requirement by exprId — one avoidable exchange
+          // on round 1 (PartProbe/JobsProbe broadcast-off dumps).
+          // A NOOP-SINK write, not a count: count plans a two-stage
+          // aggregate for a value nobody reads; the noop write computes
+          // every column in ONE job (guide §1.4)
+          val init = Bridge.materialize(
+            ids.repartition(parts, col("id")).withColumn("component", col("id")),
+            StorageLevel.MEMORY_AND_DISK_SER)(_.write.format("noop").mode("overwrite").save())
+          live = Some(init)
+          init.view
+      }
+      var changed = 1L
+      var iter = 0
+      def countChanged(df: DataFrame): Unit =
+        changed = df.filter(col("component") =!= col("prev")).count()
       while (changed > 0 && iter < maxIter) {
         val nbrMin = edges.join(labels, edges("dst") === labels("id"))
           .groupBy(col("src")).agg(min(col("component")).as("nbr_min"))
@@ -568,15 +532,18 @@ object Dedup {
           .select(col("id"),
             least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"),
             col("component").as("prev"))
-        val mat =
-          if (checkpointDir.isEmpty)
-            cutWith(next)(p =>
-              changed = p.filter(col("component") =!= col("prev")).count())
-          else {
-            val d = durable(next, s"labels_${iter % 2}")
-            changed = d.filter(col("component") =!= col("prev")).count()
+        // the convergence count is the round's one action
+        val mat = callDir match {
+          case Some(dir) =>
+            val d = Bridge.durable(next, s"$dir/labels_${iter % 2}")
+            countChanged(d)
             d
-          }
+          case None =>
+            val cut = Bridge.materialize(next, StorageLevel.MEMORY_AND_DISK_SER)(countChanged)
+            live.foreach(_.release()) // the superseded round fed this job
+            live = Some(cut)
+            cut.view
+        }
         labels = mat.select("id", "component")
         iter += 1
       }
@@ -589,8 +556,8 @@ object Dedup {
       // long-lived session must not accumulate a label-frame cache per
       // connectedComponents call. One cache-scan job; the durable path
       // returns its parquet scan as before.
-      if (checkpointDir.isEmpty) labels.localCheckpoint(true) else labels
-    } finally { releaseCache(); edges.unpersist() } // non-convergence throw too
+      if (callDir.isEmpty) labels.localCheckpoint(true) else labels
+    } finally { live.foreach(_.release()); edges.unpersist() } // every exit path
   }
 
   /** Near-dup dedup decision: every document keeps its cluster's minimum

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel
 
 /** Fixed-iteration PageRank (Page et al. 1999) and its personalized /
   * TrustRank variant (Gyöngyi et al. 2004) as pure DataFrame joins — the
@@ -19,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * with t = 1/N uniform (classic) or 1/|S| on the seed set (personalized).
   *
-  * Lineage is truncated with an eager `localCheckpoint` per iteration;
+  * Lineage is truncated per iteration by an eager cache cut
+  * (`Bridge.materialize`; the final iteration by a `localCheckpoint`);
   * the edge frame itself is hash-partitioned on src and PERSISTED instead
   * (a derived edge list would otherwise be recomputed iters+2 times —
   * measured 2.1× on q50 — and re-shuffled once per iteration; the cached
@@ -40,9 +43,6 @@ import org.apache.spark.sql.functions._
   * its own operation tree, since x/n and x·(1/n) differ by an ulp in IEEE.
   */
 object PageRank {
-
-  // per-call disambiguator for durable-checkpoint subdirs (see iterate)
-  private val durableCallSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def sortedFold(key: Column, value: Column) =
     graft.functions.Expressions.foldSumField(
@@ -114,92 +114,44 @@ object PageRank {
                       next: (Column, Column) => Column,
                       checkpointDir: Option[String] = None): DataFrame = {
     // Per-iteration lineage cut. Local mode (default): INTERMEDIATE
-    // iterations persist + count + Bridge.cutLineage — same eager
-    // executor-memory materialization as the localCheckpoint this
-    // replaced (r16), but the flat LogicalRDD view KEEPS the frame's
-    // hash(node) outputPartitioning, which a checkpointed RDD loses under
-    // AQE (UnknownPartitioning — measured in PlanSpec). With it visible,
-    // the next iteration's contribs join (rank renamed node→src against
-    // the hash(src)-bucketed edge store) and the dangling anti-join
-    // (rank against hash(src)-partitioned outdeg) are BOTH exchange-free
-    // on the rank side — 2 exchanges fewer per iteration; only the
-    // inflow groupBy(dst) shuffle, the iteration's one fundamental
-    // exchange, remains (guide §2.4: remove shuffles outright when the
-    // data is already partitioned as needed). The FINAL iteration stays
-    // an eager localCheckpoint: its frame has no join consumers (round +
-    // output only), and checkpoint blocks are self-contained +
-    // ContextCleaner-managed, so nothing stays pinned in the CacheManager
-    // after the caller is done (the cut view's cache would).
-    // Reliable mode (checkpointDir set): a parquet round-trip into the
-    // given storage — localCheckpoint blocks die with their executor and
-    // are UNRECOVERABLE (lineage is truncated), so a 1000-executor run of
-    // a long iteration wants the rank frame on durable storage. Doubles
-    // round-trip parquet bit-exactly, so both modes produce identical
-    // ranks (PageRankSpec pins it). Ping-pong between two slots: the
-    // write never targets the slot the current rank is being read from,
-    // and disk stays bounded at two node-sized snapshots.
-    // Each call gets its own subdir under checkpointDir: the returned
-    // frame is a LAZY scan of the final ping-pong slot, and a second
-    // pageRank/connectedComponents call sharing the dir would otherwise
-    // overwrite that slot — silently changing (or breaking mid-scan) the
-    // earlier call's still-unconsumed result. Growth is explicit: the
-    // subdirs are NEVER deleted by this operator (the result is a lazy
-    // scan — the operator cannot know when the caller is done with it),
-    // so a JVM making N durable calls accumulates 2N node-sized snapshots
-    // under checkpointDir. The caller owns reclamation: delete a call's
-    // subdir once its result is materialized downstream, or point
-    // checkpointDir at job-scoped scratch storage that is dropped with
-    // the job (the deployment recipe in docs/DEPLOY.md). The counter is
-    // JVM-scoped (AtomicLong), so a NEW JVM reusing the dir overwrites
-    // from call_1 again rather than growing it further.
-    // the still-cached intermediate rank frame (local mode): released as
-    // soon as the NEXT iteration's materialization has consumed it, and
-    // on every exit path by the finally below
-    var liveCache: Option[DataFrame] = None
-    def releaseCache(): Unit = {
-      liveCache.foreach(_.unpersist(blocking = false))
-      liveCache = None
-    }
-    val cut: (DataFrame, Int) => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val callDir = s"$dir/call_${durableCallSeq.incrementAndGet()}"
-        (df, i) => {
-          val slot = s"$callDir/rank_${i % 2}"
-          df.write.mode("overwrite").parquet(slot)
-          df.sparkSession.read.parquet(slot)
-        }
-      case None => (df, i) =>
-        if (i == iters) { // final: self-contained, nothing left cached
-          val out = df.localCheckpoint()
-          releaseCache()
-          out
-        } else {
-          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          // if the materialization job fails, release p here — the finally
-          // below only tracks liveCache (the PREVIOUS iteration), so a
-          // mid-iteration failure would otherwise leak one CacheManager
-          // entry per failed call in a long-lived session.
-          // The eager materialization is a NOOP-SINK write (guide §1.4),
-          // not a count: the count's value was discarded, yet it planned a
-          // partial-agg + single-partition exchange + final-agg — one more
-          // AQE stage-job per iteration (r16 measured the graph family
-          // scheduling-bound at 27 jobs/q50-run; this is VERDICT r16 #6's
-          // "the per-iteration count() is one candidate"). The noop write
-          // computes every column of every row in one job and fills the
-          // cache the same way.
-          try p.write.format("noop").mode("overwrite").save()
-          catch { case t: Throwable => p.unpersist(blocking = false); throw t }
-          releaseCache() // the superseded round fed this job; drop it now
-          liveCache = Some(p)
-          org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
-        }
+    // iterations cross a cache cut (Bridge.materialize), whose view keeps
+    // the rank frame's hash(node) partitioning: the next iteration's
+    // contribs join (rank renamed node→src against the hash(src) edge
+    // frame) and the dangling semi-join are then exchange-free on the rank
+    // side, and only the inflow groupBy(dst) shuffle remains per iteration
+    // (guide §2.4). The materializing action is a NOOP-SINK write, not a
+    // count: the count's value was never read, yet it planned a partial
+    // agg + single-partition exchange + final agg — one more AQE
+    // stage-job per iteration (guide §1.4). The FINAL iteration stays an
+    // eager localCheckpoint: its frame has no join consumers (round +
+    // output only), and checkpoint blocks are ContextCleaner-managed, so
+    // nothing stays pinned in the CacheManager after the caller is done.
+    // Reliable mode (checkpointDir set): a parquet round-trip
+    // (Bridge.durable) — localCheckpoint blocks die with their executor
+    // and are UNRECOVERABLE, so a 1000-executor run of a long iteration
+    // wants the rank frame on durable storage; both modes produce
+    // identical ranks (PageRankSpec pins it). Ping-pong between two
+    // slots: the write never targets the slot the current rank is being
+    // read from, and disk stays bounded at two node-sized snapshots per
+    // call (Bridge.durableCallDir: one subdir per call, caller-reclaimed).
+    val callDir = checkpointDir.map(Bridge.durableCallDir(_, "call"))
+    var live: Option[Bridge.Cut] = None // the live intermediate iteration
+    def cut(df: DataFrame, i: Int): DataFrame = callDir match {
+      case Some(dir) => Bridge.durable(df, s"$dir/rank_${i % 2}")
+      case None if i == iters => df.localCheckpoint() // the finally releases live
+      case None =>
+        val c = Bridge.materialize(df, StorageLevel.MEMORY_AND_DISK_SER)(
+          _.write.format("noop").mode("overwrite").save())
+        live.foreach(_.release()) // the superseded iteration fed this job
+        live = Some(c)
+        c.view
     }
     // persisted, not checkpointed: the aggregation inherits e's hash(src)
     // partitioning (bucketed store or pre-partitioned derived frame), and
     // persist keeps it visible to every iteration's join — checkpoint
     // would re-shuffle this node-sized frame once per iteration
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     // The dangling node SET is iteration-independent (nodes with no
     // out-edge); only its MASS changes per iteration. Computing the set
     // once (r16, guide §1.2 "don't compute things you throw away")
@@ -215,10 +167,10 @@ object PageRank {
     // here), so the oracle twins are unchanged.
     val danglingNodes = nodes.select(col("node"))
       .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val nDangling = danglingNodes.count()
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
     var rank = nodes.withColumn("rank", init)
     try {
+      val nDangling = danglingNodes.count()
       for (i <- 1 to iters) {
         val contribs = e
           .join(rank.select(col("node").as("src"), col("rank")), "src")
@@ -277,7 +229,7 @@ object PageRank {
       // explicit unpersist (unlike checkpoint RDDs, GC'd by the
       // ContextCleaner) — a long-lived session would otherwise pin a
       // node-sized cache per pageRank call
-      releaseCache(); outdeg.unpersist(); danglingNodes.unpersist()
+      live.foreach(_.release()); outdeg.unpersist(); danglingNodes.unpersist()
     }
     rank.select(col("node"), round(col("rank"), 6).as("rank"))
   }

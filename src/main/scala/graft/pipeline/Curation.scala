@@ -2,6 +2,9 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import graft.functions.{Expressions, TextFns}
 import graft.operators.{Dedup, Pack, Split}
 import graft.sources.Artifacts
@@ -223,281 +226,267 @@ object Curation {
     // chain instead of reading cache — adding the span-gate stage (one
     // more multi-reference layer) took the 12-branch qc01 entry from
     // 26 s to 93 s at sf0.1 under lazy persist; eager per-arrow
-    // materialization runs every chain exactly once. The count each mark
-    // performs is CAPTURED (Stages.counts) so observers never pay a
-    // second action per stage.
-    val audit = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    // storage mode: write the stage to parquet and return the SCAN of the
-    // files — the count reads parquet footers (metadata, not a data pass)
-    def storeOnly(name: String, df: DataFrame): DataFrame = {
-      val path = s"${storageDir.get}/$name.parquet"
-      val spark = df.sparkSession
-      val committed = resume && {
-        val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      }
-      if (!committed) df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
-    def store(name: String, df: DataFrame): DataFrame = {
-      val back = storeOnly(name, df)
-      audit(name) = back.count()
-      back
-    }
-    // Per-stage wall attribution (Stages.stageSecs): boundary-to-boundary
-    // deltas, so eager work between two marks (the component loop's
-    // checkpoint rounds run during construction, not inside any count)
-    // lands on the stage whose materialization follows it.
-    val stageWall = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    var lastBoundary = System.nanoTime()
-    def stamp(name: String): Unit = {
-      val now = System.nanoTime()
-      stageWall(name) = (now - lastBoundary) / 1e9
-      lastBoundary = now
-    }
-    // Persist mode CUTS the logical plan at each materialization boundary
-    // (Bridge.cutLineage — a flat LogicalRDD view over the cache-backed
-    // physical RDD). Without the cut, stage N's LOGICAL tree embeds stage
-    // N−1's two to four times (anti-joins, pair generation reading ta/tb),
-    // so the tree grows geometrically with stage depth and the analyzer/
-    // optimizer walk ALL of it on every downstream action even though the
-    // caches deduplicate execution — measured r16 at sf0.1: the cache-mode
-    // entry ran 26.8 s against the storage-mode twin's 9.7 s for the SAME
-    // pipeline, with the gap concentrated in the deepest stages (split
-    // 4.3 s, packed 7.5 s of near-zero real compute). Storage mode never
-    // pays this (a parquet re-read is a flat scan); the cut is the
-    // cache-mode equivalent.
-    val cutOrig = scala.collection.mutable.Map.empty[DataFrame, DataFrame]
-    def cut(p: DataFrame): DataFrame = {
-      val c = org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
-      cutOrig(c) = p
-      c
-    }
-    def mark(name: String, df: DataFrame): DataFrame = {
-      val out =
-        if (storageDir.isDefined) store(name, df)
-        else if (persist) {
-          val p = df.persist(stageStorageLevel); audit(name) = p.count(); cut(p)
+    // materialization runs every chain exactly once.
+    val marker = new StageMarker(persist && storageDir.isEmpty, release, stageStorageLevel)
+    marker.guard {
+      val audit = marker.audit
+      // storage mode: write the stage to parquet and return the SCAN of the
+      // files — the count reads parquet footers (metadata, not a data pass)
+      def storeOnly(name: String, df: DataFrame): DataFrame = {
+        val path = s"${storageDir.get}/$name.parquet"
+        val spark = df.sparkSession
+        val committed = resume && {
+          val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
         }
-        else df
-      if (storageDir.isDefined || persist) stamp(name)
-      out
-    }
-    // drop an upstream stage's cache once the downstream materialization
-    // has consumed it (no-op outside persist+release mode, and a no-op on
-    // storage mode's never-cached scan frames); non-blocking — the store
-    // reclaims blocks as it goes, lineage stays recomputable. Unpersists
-    // the ORIGINAL persisted frame behind a plan-cut view: the cut view's
-    // flat plan no longer maps to the cache entry.
-    def drop(df: DataFrame): Unit =
-      if (persist && release) cutOrig.getOrElse(df, df).unpersist(blocking = false)
-    // see curateDelta's lineageCut: eager one-shot materialization (under
-    // AQE) for the pair frame connectedComponents' edge union reads twice.
-    // Storage mode cuts through parquet instead — at cluster scale the
-    // pair frame on durable storage is also the dedup-stage restart point.
-    def lineageCut(df: DataFrame): DataFrame =
-      if (storageDir.isDefined) storeOnly("pairs", df) // a checkpoint, not a
-      // counted stage: no audit row, so both modes emit identical counts
-      else if (persist) df.localCheckpoint(true, stageStorageLevel) else df
-    val id = col(idCol)
-
-    // 1. canonicalize: one byte representation (NFC) with PII gone, BEFORE
-    // any hash sees the text. Persisted in persist mode: the quality stage
-    // reads it twice (gate filter + repetition signals), and NFC+PII regex
-    // scrubbing is the most expensive row-local pass in the pipeline —
-    // without the cache it runs once per consumer.
-    // Parallelism note (measured, round 9): the fixture's documents.parquet
-    // is ONE row group, so this scan — and every row-local pass over it —
-    // runs on one core (the canon+quality block is ~7.6 s of qc01's 32 s).
-    // A repartition(defaultParallelism) here parallelizes the regex 32×
-    // but REGRESSES the entry to 40.4 s: the pipeline's ~25 downstream
-    // jobs then schedule 32 tasks each over kilobyte partitions, and task
-    // overhead swamps the regex win at this corpus size. Partition count
-    // must track data volume — at 100 TB the scan has thousands of real
-    // splits and no repartition is needed; forcing one at demo scale is a
-    // fixture-tuned pessimization, so the input partitioning is left to
-    // the source.
-    // barrier-fenced (see Expressions.Barrier): in persist mode the stage
-    // cache is the materialization point, but a persist=false caller's
-    // gate filters would otherwise be pushed below this projection with
-    // the scrub∘NFC subtree substituted per reference (measured 14.7 vs
-    // 1.9 s/M on the streaming twin of this exact shape)
-    val scrubbed = docs.select(id,
-      Expressions.barrier(
-        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
-    // 1b. optional line-level boilerplate strip (CCNet paragraph dedup) —
-    // BEFORE any hash: chrome differences must not defeat exact dedup.
-    // Rewrites text, drops no rows, so the audit frame keeps its shape.
-    val lineClean = cfg.lineDedupMaxDocFreq.fold(scrubbed) { k =>
-      Dedup.dedupLines(scrubbed, idCol, textCol, k)
-        .select(id, col("text").as(textCol))
-    }
-    val canon = mark("input", lineClean)
-
-    // 2. row-local quality gates (narrow, no shuffle), then the doc-keyed
-    // repetition signals — cheap filters shrink every pairwise stage after
-    val gated0 = canon
-      .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
-        TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
-    // 2a'. optional blocklist ratio gate (Blocklist.keepPredicate —
-    // map-only for the Config-sized term list)
-    val gated = if (cfg.blockTerms.isEmpty) gated0
-      else gated0.filter(graft.operators.Blocklist.keepPredicate(
-        col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
-    val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
-      .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
-        col("top_bigram_frac") <= cfg.maxTopBigramFrac)
-      .select(id)
-    val quality = mark("quality", gated.join(rep, Seq(idCol), "left_semi"))
-    drop(canon) // quality (gate + repetition) was canon's only consumer —
-    // and canon is the pipeline's LARGEST cache (full corpus text)
-
-    // 2b. optional boilerplate gate: drop docs mostly covered by windows
-    // duplicated across >= dupSpanMinDocs documents (substring-granular —
-    // the signal the document-level stages below can't see). One window-
-    // hash map pass + two combinable aggregates + one 8-byte-hash join
-    // over the quality survivors; a no-op frame when disabled.
-    val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
-      val keep = Dedup.dupSpanStats(quality, idCol, textCol,
-          cfg.dupSpanWidth, cfg.dupSpanMinDocs)
-        .filter(col("dup_frac") <= maxFrac).select(id)
-      mark("spans", quality.join(keep, Seq(idCol), "left_semi"))
-    }
-    // gate off → the spans frame IS the quality frame; the audit row still
-    // exists so a silently (de)activated gate flips the observer's hash
-    if ((persist || storageDir.isDefined) && !audit.contains("spans"))
-      audit("spans") = audit("quality")
-    if (spanGated ne quality) drop(quality) // gate on: quality fed only the gate
-
-    // 3. exact dedup (fingerprint aggregate), keep the min-id copy
-    val exactKeep = Dedup.exactByFingerprint(spanGated, textCol, idCol)
-      .select(col("keep_id").as(idCol))
-    val exact = mark("exact", spanGated.join(exactKeep, Seq(idCol), "left_semi"))
-    drop(spanGated)
-
-    // 4. near-dup clusters over the survivors, keep canonical members.
-    // Prefix-filtered pair generation (exact — identical output to the
-    // plain inverted index, the DedupSpec-pinned equivalence): at a
-    // production dedup threshold the prefix indexes ~15-30% of each doc
-    // and hot boilerplate shingles sort to the unindexed tail, which is
-    // the regime a real corpus (and this fixture's ~31-word vocabulary)
-    // lives in — see ScaleProbe `jaccard` / docs/SCALE.md.
-    // Optional verify stage: confirm Jaccard candidates by edit distance
-    // (normalized by the longer text) before they merge clusters
-    val rawPairs = Dedup.ngramJaccardPairsPrefix(exact, idCol, textCol,
-      n = cfg.ngramN, threshold = cfg.nearDupJaccard)
-    val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
-      val ta = exact.select(id.as("id_a"), col(textCol).as("__ta"))
-      val tb = exact.select(id.as("id_b"), col(textCol).as("__tb"))
-      // BOUNDED Levenshtein: the DP early-exits (and returns -1) once the
-      // distance exceeds ⌈maxRatio·max(|a|,|b|)⌉ — O(bound·min) per pair
-      // instead of O(|a|·|b|), which matters when candidates are long
-      // documents. -1 (exceeded) fails the ≤ comparison like any
-      // over-bound distance; the exact unrounded ratio check stays.
-      val bound = ceil(lit(maxRatio) *
-        greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
-      val dist = org.apache.spark.sql.graftbridge.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.Levenshtein(
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__ta")),
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__tb")),
-          Some(org.apache.spark.sql.graftbridge.Bridge.expression(bound))))
-      rawPairs.join(ta, "id_a").join(tb, "id_b")
-        .filter(dist >= 0 && dist.cast("double") <=
-          lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-    })
-    val canonical = Dedup.nearDupClusters(exact, idCol, pairs)
-      .filter(col("is_canonical")).select(id)
-    val deduped = mark("neardup", exact.join(canonical, Seq(idCol), "left_semi"))
-    drop(exact) // pairs are checkpointed, clusters collected — exact is done
-
-    // 5. decontaminate against the benchmark (containment, not Jaccard).
-    // The benchmark goes through the SAME canonicalization as stage 1 —
-    // shingles must compare canonical bytes to canonical bytes, or a
-    // decomposed-Unicode benchmark item (or one containing PII the corpus
-    // copy had rewritten to <EMAIL>/<IP>/<PHONE>) could never match its
-    // contaminated twin and would silently ship in the training set
-    val benchCanon = benchmark.select(col(idCol),
-      TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
-    val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
-      n = cfg.ngramN, threshold = cfg.contaminationMax)
-      .select(col("doc_id").as(idCol)).distinct()
-    val clean = mark("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
-    drop(deduped)
-
-    // 6. deterministic split, 7. pack the configured train split
-    val split0 = Split.assignSplit(clean, id, cfg.splits)
-    val split =
-      if (storageDir.isDefined) {
-        val back = store("split", split0)
-        audit.remove("split") // observer contract wants per-split rows
-        back.groupBy(col("split")).count().collect()
-          .foreach(r => audit("split_" + r.getString(0)) = r.getLong(1))
+        if (!committed) df.write.mode("overwrite").parquet(path)
+        spark.read.parquet(path)
+      }
+      def store(name: String, df: DataFrame): DataFrame = {
+        val back = storeOnly(name, df)
+        audit(name) = back.count()
         back
-      } else markSplit(split0, persist, audit)
-    if (storageDir.isDefined || persist) stamp("split")
-    drop(clean)
-    val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
-      .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    val packed0 = Pack.packSequences(trainTokens, idCol, "n_tokens",
-      cfg.seqBudget, cfg.packShards)
-    val packed =
-      if (storageDir.isDefined) {
-        val back = store("packed", packed0)
-        audit.remove("packed")
-        val r = back.agg(count(lit(1)).as("pieces"),
-          countDistinct(col("shard"), col("seq")).as("sequences"),
-          sum(col("tok_len")).cast("long").as("tokens")).collect()(0)
-        audit("pieces") = r.getLong(0)
-        audit("sequences") = r.getLong(1)
-        if (!r.isNullAt(2)) audit("packed_tokens") = r.getLong(2)
-        back
-      } else markPacked(packed0, persist, audit)
-    if (storageDir.isDefined || persist) stamp("packed")
-    // ListMap: keep pipeline order so the bench JSON reads as the stage
-    // sequence (a plain toMap re-hashes the keys)
-    val stageSecsOrdered =
-      scala.collection.immutable.ListMap(stageWall.toSeq: _*)
-    lastStageSecs.set(stageSecsOrdered)
-    Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
-      counts = audit.toMap, stageSecs = stageSecsOrdered)
+      }
+      // Per-stage wall attribution (Stages.stageSecs): boundary-to-boundary
+      // deltas, so eager work between two marks (the component loop's
+      // checkpoint rounds run during construction, not inside any count)
+      // lands on the stage whose materialization follows it.
+      val stageWall = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+      var lastBoundary = System.nanoTime()
+      def stamp(name: String): Unit = {
+        val now = System.nanoTime()
+        stageWall(name) = (now - lastBoundary) / 1e9
+        lastBoundary = now
+      }
+      // Persist mode cuts the logical plan at each boundary (the marker's
+      // cache cuts): uncut, r16 measured the cache-mode entry at 26.8 s
+      // against the storage-mode twin's 9.7 s for the SAME pipeline, the gap
+      // concentrated in the deepest stages (split 4.3 s, packed 7.5 s of
+      // near-zero real compute) — a parquet re-read is a flat scan already.
+      def mark(name: String, df: DataFrame): DataFrame = {
+        val out = if (storageDir.isDefined) store(name, df) else marker.counted(name, df)
+        if (storageDir.isDefined || persist) stamp(name)
+        out
+      }
+      // see curateDelta's lineageCut: eager one-shot materialization (under
+      // AQE) for the pair frame connectedComponents' edge union reads twice.
+      // Storage mode cuts through parquet instead — at cluster scale the
+      // pair frame on durable storage is also the dedup-stage restart point.
+      def lineageCut(df: DataFrame): DataFrame =
+        if (storageDir.isDefined) storeOnly("pairs", df) // a checkpoint, not a
+        // counted stage: no audit row, so both modes emit identical counts
+        else if (persist) df.localCheckpoint(true, stageStorageLevel) else df
+      val id = col(idCol)
+
+      // 1. canonicalize: one byte representation (NFC) with PII gone, BEFORE
+      // any hash sees the text. Persisted in persist mode: the quality stage
+      // reads it twice (gate filter + repetition signals), and NFC+PII regex
+      // scrubbing is the most expensive row-local pass in the pipeline —
+      // without the cache it runs once per consumer.
+      // Parallelism note (measured, round 9): the fixture's documents.parquet
+      // is ONE row group, so this scan — and every row-local pass over it —
+      // runs on one core (the canon+quality block is ~7.6 s of qc01's 32 s).
+      // A repartition(defaultParallelism) here parallelizes the regex 32×
+      // but REGRESSES the entry to 40.4 s: the pipeline's ~25 downstream
+      // jobs then schedule 32 tasks each over kilobyte partitions, and task
+      // overhead swamps the regex win at this corpus size. Partition count
+      // must track data volume — at 100 TB the scan has thousands of real
+      // splits and no repartition is needed; forcing one at demo scale is a
+      // fixture-tuned pessimization, so the input partitioning is left to
+      // the source.
+      // barrier-fenced (see Expressions.Barrier): in persist mode the stage
+      // cache is the materialization point, but a persist=false caller's
+      // gate filters would otherwise be pushed below this projection with
+      // the scrub∘NFC subtree substituted per reference (measured 14.7 vs
+      // 1.9 s/M on the streaming twin of this exact shape)
+      val scrubbed = docs.select(id,
+        Expressions.barrier(
+          TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
+      // 1b. optional line-level boilerplate strip (CCNet paragraph dedup) —
+      // BEFORE any hash: chrome differences must not defeat exact dedup.
+      // Rewrites text, drops no rows, so the audit frame keeps its shape.
+      val lineClean = cfg.lineDedupMaxDocFreq.fold(scrubbed) { k =>
+        Dedup.dedupLines(scrubbed, idCol, textCol, k)
+          .select(id, col("text").as(textCol))
+      }
+      val canon = mark("input", lineClean)
+
+      // 2. row-local quality gates (narrow, no shuffle), then the doc-keyed
+      // repetition signals — cheap filters shrink every pairwise stage after
+      val gated0 = canon
+        .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
+          TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
+      // 2a'. optional blocklist ratio gate (Blocklist.keepPredicate —
+      // map-only for the Config-sized term list)
+      val gated = if (cfg.blockTerms.isEmpty) gated0
+        else gated0.filter(graft.operators.Blocklist.keepPredicate(
+          col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
+      val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
+        .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
+          col("top_bigram_frac") <= cfg.maxTopBigramFrac)
+        .select(id)
+      val quality = mark("quality", gated.join(rep, Seq(idCol), "left_semi"))
+      marker.drop(canon) // quality (gate + repetition) was canon's only consumer —
+      // and canon is the pipeline's LARGEST cache (full corpus text)
+
+      // 2b. optional boilerplate gate: drop docs mostly covered by windows
+      // duplicated across >= dupSpanMinDocs documents (substring-granular —
+      // the signal the document-level stages below can't see). One window-
+      // hash map pass + two combinable aggregates + one 8-byte-hash join
+      // over the quality survivors; a no-op frame when disabled.
+      val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
+        val keep = Dedup.dupSpanStats(quality, idCol, textCol,
+            cfg.dupSpanWidth, cfg.dupSpanMinDocs)
+          .filter(col("dup_frac") <= maxFrac).select(id)
+        mark("spans", quality.join(keep, Seq(idCol), "left_semi"))
+      }
+      // gate off → the spans frame IS the quality frame; the audit row still
+      // exists so a silently (de)activated gate flips the observer's hash
+      if ((persist || storageDir.isDefined) && !audit.contains("spans"))
+        audit("spans") = audit("quality")
+      if (spanGated ne quality) marker.drop(quality) // gate on: quality fed only the gate
+
+      // 3. exact dedup (fingerprint aggregate), keep the min-id copy
+      val exactKeep = Dedup.exactByFingerprint(spanGated, textCol, idCol)
+        .select(col("keep_id").as(idCol))
+      val exact = mark("exact", spanGated.join(exactKeep, Seq(idCol), "left_semi"))
+      marker.drop(spanGated)
+
+      // 4. near-dup clusters over the survivors, keep canonical members.
+      // Prefix-filtered pair generation (exact — identical output to the
+      // plain inverted index, the DedupSpec-pinned equivalence): at a
+      // production dedup threshold the prefix indexes ~15-30% of each doc
+      // and hot boilerplate shingles sort to the unindexed tail, which is
+      // the regime a real corpus (and this fixture's ~31-word vocabulary)
+      // lives in — see ScaleProbe `jaccard` / docs/SCALE.md.
+      // Optional verify stage: confirm Jaccard candidates by edit distance
+      // (normalized by the longer text) before they merge clusters
+      val rawPairs = Dedup.ngramJaccardPairsPrefix(exact, idCol, textCol,
+        n = cfg.ngramN, threshold = cfg.nearDupJaccard)
+      val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
+        val ta = exact.select(id.as("id_a"), col(textCol).as("__ta"))
+        val tb = exact.select(id.as("id_b"), col(textCol).as("__tb"))
+        // BOUNDED Levenshtein: the DP early-exits (and returns -1) once the
+        // distance exceeds ⌈maxRatio·max(|a|,|b|)⌉ — O(bound·min) per pair
+        // instead of O(|a|·|b|), which matters when candidates are long
+        // documents. -1 (exceeded) fails the ≤ comparison like any
+        // over-bound distance; the exact unrounded ratio check stays.
+        val bound = ceil(lit(maxRatio) *
+          greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
+        val dist = Bridge.column(
+          org.apache.spark.sql.catalyst.expressions.Levenshtein(
+            Bridge.expression(col("__ta")),
+            Bridge.expression(col("__tb")),
+            Some(Bridge.expression(bound))))
+        rawPairs.join(ta, "id_a").join(tb, "id_b")
+          .filter(dist >= 0 && dist.cast("double") <=
+            lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
+          .select(col("id_a"), col("id_b"), col("jaccard"))
+      })
+      val canonical = Dedup.nearDupClusters(exact, idCol, pairs)
+        .filter(col("is_canonical")).select(id)
+      val deduped = mark("neardup", exact.join(canonical, Seq(idCol), "left_semi"))
+      marker.drop(exact) // pairs are checkpointed, clusters collected — exact is done
+
+      // 5. decontaminate against the benchmark (containment, not Jaccard).
+      // The benchmark goes through the SAME canonicalization as stage 1 —
+      // shingles must compare canonical bytes to canonical bytes, or a
+      // decomposed-Unicode benchmark item (or one containing PII the corpus
+      // copy had rewritten to <EMAIL>/<IP>/<PHONE>) could never match its
+      // contaminated twin and would silently ship in the training set
+      val benchCanon = benchmark.select(col(idCol),
+        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
+      val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
+        n = cfg.ngramN, threshold = cfg.contaminationMax)
+        .select(col("doc_id").as(idCol)).distinct()
+      val clean = mark("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
+      marker.drop(deduped)
+
+      // 6. deterministic split, 7. pack the configured train split
+      val split0 = Split.assignSplit(clean, id, cfg.splits)
+      val split =
+        if (storageDir.isDefined) {
+          val back = store("split", split0)
+          audit.remove("split") // observer contract wants per-split rows
+          marker.splitCounts(back)
+          back
+        } else marker(split0)(marker.splitCounts)
+      if (storageDir.isDefined || persist) stamp("split")
+      marker.drop(clean)
+      val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
+        .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+      val packed0 = Pack.packSequences(trainTokens, idCol, "n_tokens",
+        cfg.seqBudget, cfg.packShards)
+      val packed =
+        if (storageDir.isDefined) {
+          val back = store("packed", packed0)
+          audit.remove("packed")
+          marker.packedStats(back)
+          back
+        } else marker(packed0)(marker.packedStats)
+      if (storageDir.isDefined || persist) stamp("packed")
+      // ListMap: keep pipeline order so the bench JSON reads as the stage
+      // sequence (a plain toMap re-hashes the keys)
+      val stageSecsOrdered =
+        scala.collection.immutable.ListMap(stageWall.toSeq: _*)
+      lastStageSecs.set(stageSecsOrdered)
+      Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
+        counts = audit.toMap, stageSecs = stageSecsOrdered)
+    }
   }
 
-  /** Persist-mode materialization of the split frame whose eager action is
-    * the per-split histogram (one job) rather than a bare count — the
-    * observer's `05_split_*` rows ride the materialization for free.
+  /** The persist-mode stage boundaries [stages] and [curateDelta] share.
+    * Each boundary is one cache cut (Bridge.materialize) whose action is
+    * the stage's observer read, recorded in `audit` (Stages.counts) so
+    * observers never pay a second action per stage. Outside persist mode
+    * frames pass through untouched and nothing is recorded.
     */
-  private def markSplit(df: DataFrame, persist: Boolean,
-                        audit: scala.collection.mutable.Map[String, Long],
-                        level: org.apache.spark.storage.StorageLevel = stageStorageLevel): DataFrame =
-    if (!persist) df else {
-      val p = df.persist(level)
-      p.groupBy(col("split")).count().collect()
-        .foreach(r => audit("split_" + r.getString(0)) = r.getLong(1))
-      // plan cut, same as mark(): downstream packing plans a flat scan
-      org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
-    }
+  private final class StageMarker(persist: Boolean, release: Boolean, level: StorageLevel) {
+    val audit = mutable.LinkedHashMap.empty[String, Long]
+    private val held = mutable.Map.empty[DataFrame, Bridge.Cut]
 
-  /** Persist-mode materialization of the packed frame whose eager action is
-    * the three packed stats in ONE agg job (piece count, distinct
-    * (shard,seq) sequences, total tokens) instead of three observer
-    * actions. `packed_tokens` is recorded only when pieces exist: an empty
-    * pack's token sum is SQL NULL and the observer reproduces that by the
-    * key's absence.
-    */
-  private def markPacked(df: DataFrame, persist: Boolean,
-                         audit: scala.collection.mutable.Map[String, Long],
-                         level: org.apache.spark.storage.StorageLevel = stageStorageLevel): DataFrame =
-    if (!persist) df else {
-      val p = df.persist(level)
-      val r = p.agg(count(lit(1)).as("pieces"),
+    def apply(df: DataFrame)(action: DataFrame => Unit): DataFrame =
+      if (!persist) df else {
+        val c = Bridge.materialize(df, level)(action)
+        held(c.view) = c
+        c.view
+      }
+
+    /** A stage boundary whose action is the stage's row count. */
+    def counted(name: String, df: DataFrame): DataFrame = apply(df)(p => audit(name) = p.count())
+
+    /** The split frame's action: the per-split histogram (one job) rather
+      * than a bare count — the observer's `05_split_*` rows ride it.
+      */
+    def splitCounts(df: DataFrame): Unit =
+      df.groupBy(col("split")).count().collect()
+        .foreach(r => audit("split_" + r.getString(0)) = r.getLong(1))
+
+    /** The packed frame's action: piece count, distinct (shard, seq)
+      * sequences and total tokens in ONE agg job. `packed_tokens` is
+      * recorded only when pieces exist: an empty pack's token sum is SQL
+      * NULL and the observer reproduces that by the key's absence.
+      */
+    def packedStats(df: DataFrame): Unit = {
+      val r = df.agg(count(lit(1)).as("pieces"),
         countDistinct(col("shard"), col("seq")).as("sequences"),
         sum(col("tok_len")).cast("long").as("tokens")).collect()(0)
       audit("pieces") = r.getLong(0)
       audit("sequences") = r.getLong(1)
       if (!r.isNullAt(2)) audit("packed_tokens") = r.getLong(2)
-      org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
     }
+
+    /** Release a stage's cache once the downstream materialization has
+      * consumed it (release mode only; a no-op on frames it never cut).
+      */
+    def drop(df: DataFrame): Unit = if (release) held.remove(df).foreach(_.release())
+
+    /** Build the stages; if construction throws, release every stage
+      * still held, so a failed run leaves no cache entry behind.
+      */
+    def guard[T](build: => T): T =
+      try build catch { case t: Throwable => held.values.foreach(_.release()); throw t }
+  }
 
   /** The persisted state an incremental run needs from the batch that
     * shipped: the curated corpus documents (id + CANONICAL text — the
@@ -646,165 +635,156 @@ object Curation {
                   cfg: Config = Config(), persist: Boolean = false,
                   release: Boolean = false): Stages = {
     // eager per-arrow materialization in persist mode, count captured;
-    // release drops each stage's cache once consumed; logical plan cut at
-    // each boundary (drop unpersists the original behind the cut view) —
-    // see stages() for all three
-    val audit = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val cutOrig = scala.collection.mutable.Map.empty[DataFrame, DataFrame]
-    def mark(name: String, df: DataFrame): DataFrame =
-      if (persist) {
-        val p = df.persist(deltaStorageLevel); audit(name) = p.count()
-        val c = org.apache.spark.sql.graftbridge.Bridge.cutLineage(p)
-        cutOrig(c) = p
-        c
-      } else df
-    def drop(df: DataFrame): Unit =
-      if (persist && release) cutOrig.getOrElse(df, df).unpersist(blocking = false)
-    // Eager one-shot materialization for the verified pair frame: it fans
-    // out FIVE ways (the connected-components edge union reads it twice,
-    // corpusLinked twice, deltaPairs once) and its first consumer is CC's
-    // eager edge checkpoint, so an unpersisted chain re-runs posting-join
-    // pair generation + the edit-distance verify per reference (qc02
-    // benched 42.2 s). localCheckpoint rather than persist: the checkpoint
-    // job runs the chain once UNDER AQE and downstream consumers read
-    // stored blocks, whereas .persist() compiles the cached subtree
-    // without AQE's runtime re-planning — measured 57.1 s, WORSE than no
-    // caching at all (and the round's earlier 3-consumer persist attempt
-    // measured the same effect, 44.8 vs 37.7 s).
-    def lineageCut(df: DataFrame): DataFrame =
-      if (persist) df.localCheckpoint(true, deltaStorageLevel) else df
-    val id = col(idCol)
+    // release drops each stage's cache once consumed — see stages()
+    val marker = new StageMarker(persist, release, deltaStorageLevel)
+    marker.guard {
+      // Eager one-shot materialization for the verified pair frame: it fans
+      // out FIVE ways (the connected-components edge union reads it twice,
+      // corpusLinked twice, deltaPairs once) and its first consumer is CC's
+      // eager edge checkpoint, so an unpersisted chain re-runs posting-join
+      // pair generation + the edit-distance verify per reference (qc02
+      // benched 42.2 s). localCheckpoint rather than persist: the checkpoint
+      // job runs the chain once UNDER AQE and downstream consumers read
+      // stored blocks, whereas .persist() compiles the cached subtree
+      // without AQE's runtime re-planning — measured 57.1 s, WORSE than no
+      // caching at all (and the round's earlier 3-consumer persist attempt
+      // measured the same effect, 44.8 vs 37.7 s).
+      def lineageCut(df: DataFrame): DataFrame =
+        if (persist) df.localCheckpoint(true, deltaStorageLevel) else df
+      val id = col(idCol)
 
-    // 1-2. canonicalize + row-local gates: identical to the batch stages
-    // (canon persisted for the same double-read reason; input partitioning
-    // left to the source for the same task-overhead reason — see stages())
-    val scrubbedDelta = delta.select(id,
-      Expressions.barrier( // same fence as stages() — see the note there
-        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
-    // 1b. optional line strip, incremental analog: line doc-frequencies
-    // count over corpus ∪ delta (chrome shared with shipped docs must
-    // count), only delta docs are rewritten. Honest caveat: the corpus
-    // side contributes its SURVIVING lines — chrome the batch gate already
-    // stripped is absent from state, so an old footer re-protects only if
-    // the delta alone re-reaches maxDocFreq (persisting the batch's line
-    // df table as state would close this, the same trade as the span
-    // gate's window-hash table — see stateOf).
-    val lineClean = cfg.lineDedupMaxDocFreq.fold(scrubbedDelta) { k =>
-      val corpusOnly = state.docs.select(id, col(textCol))
-        .join(scrubbedDelta.select(id), Seq(idCol), "left_anti")
-      Dedup.dedupLines(corpusOnly.unionByName(scrubbedDelta), idCol, textCol, k)
-        .join(scrubbedDelta.select(id), Seq(idCol), "left_semi")
-        .select(id, col("text").as(textCol))
-    }
-    val canon = mark("input", lineClean)
-    val gated0 = canon
-      .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
-        TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
-    // 2a'. optional blocklist ratio gate — identical to the batch stage
-    val gated = if (cfg.blockTerms.isEmpty) gated0
-      else gated0.filter(graft.operators.Blocklist.keepPredicate(
-        col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
-    val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
-      .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
-        col("top_bigram_frac") <= cfg.maxTopBigramFrac)
-      .select(id)
-    val quality = mark("quality", gated.join(rep, Seq(idCol), "left_semi"))
-    drop(canon)
+      // 1-2. canonicalize + row-local gates: identical to the batch stages
+      // (canon persisted for the same double-read reason; input partitioning
+      // left to the source for the same task-overhead reason — see stages())
+      val scrubbedDelta = delta.select(id,
+        Expressions.barrier( // same fence as stages() — see the note there
+          TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
+      // 1b. optional line strip, incremental analog: line doc-frequencies
+      // count over corpus ∪ delta (chrome shared with shipped docs must
+      // count), only delta docs are rewritten. Honest caveat: the corpus
+      // side contributes its SURVIVING lines — chrome the batch gate already
+      // stripped is absent from state, so an old footer re-protects only if
+      // the delta alone re-reaches maxDocFreq (persisting the batch's line
+      // df table as state would close this, the same trade as the span
+      // gate's window-hash table — see stateOf).
+      val lineClean = cfg.lineDedupMaxDocFreq.fold(scrubbedDelta) { k =>
+        val corpusOnly = state.docs.select(id, col(textCol))
+          .join(scrubbedDelta.select(id), Seq(idCol), "left_anti")
+        Dedup.dedupLines(corpusOnly.unionByName(scrubbedDelta), idCol, textCol, k)
+          .join(scrubbedDelta.select(id), Seq(idCol), "left_semi")
+          .select(id, col("text").as(textCol))
+      }
+      val canon = marker.counted("input", lineClean)
+      val gated0 = canon
+        .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
+          TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
+      // 2a'. optional blocklist ratio gate — identical to the batch stage
+      val gated = if (cfg.blockTerms.isEmpty) gated0
+        else gated0.filter(graft.operators.Blocklist.keepPredicate(
+          col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
+      val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
+        .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
+          col("top_bigram_frac") <= cfg.maxTopBigramFrac)
+        .select(id)
+      val quality = marker.counted("quality", gated.join(rep, Seq(idCol), "left_semi"))
+      marker.drop(canon)
 
-    // 2b. optional boilerplate gate, the incremental analog: a delta doc's
-    // windows are counted against corpus ∪ delta (boilerplate shared with
-    // already-shipped docs must count — the batch gate would have seen
-    // it), then only delta docs are gated; shipped corpus docs are never
-    // re-judged. Reads the corpus text like nearDupDelta does; a
-    // production run would persist the corpus window-hash table as state
-    // instead of recomputing it (same class of trade as the near-dup
-    // index, see stateOf).
-    val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
-      val all = state.docs.select(id, col(textCol))
-        .unionByName(quality.select(id, col(textCol)))
-      val keep = Dedup.dupSpanStats(all, idCol, textCol,
-          cfg.dupSpanWidth, cfg.dupSpanMinDocs)
-        .filter(col("dup_frac") <= maxFrac).select(id)
-      mark("spans", quality.join(keep, Seq(idCol), "left_semi"))
-    }
-    if (persist && !audit.contains("spans")) audit("spans") = audit("quality")
-    if (spanGated ne quality) drop(quality)
+      // 2b. optional boilerplate gate, the incremental analog: a delta doc's
+      // windows are counted against corpus ∪ delta (boilerplate shared with
+      // already-shipped docs must count — the batch gate would have seen
+      // it), then only delta docs are gated; shipped corpus docs are never
+      // re-judged. Reads the corpus text like nearDupDelta does; a
+      // production run would persist the corpus window-hash table as state
+      // instead of recomputing it (same class of trade as the near-dup
+      // index, see stateOf).
+      val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
+        val all = state.docs.select(id, col(textCol))
+          .unionByName(quality.select(id, col(textCol)))
+        val keep = Dedup.dupSpanStats(all, idCol, textCol,
+            cfg.dupSpanWidth, cfg.dupSpanMinDocs)
+          .filter(col("dup_frac") <= maxFrac).select(id)
+        marker.counted("spans", quality.join(keep, Seq(idCol), "left_semi"))
+      }
+      if (persist && !marker.audit.contains("spans"))
+        marker.audit("spans") = marker.audit("quality")
+      if (spanGated ne quality) marker.drop(quality)
 
-    // 3. exact dedup against the corpus fingerprint index
-    val exact = mark("exact", Dedup.dedupDelta(spanGated, state.fingerprints, textCol, idCol))
-    drop(spanGated)
+      // 3. exact dedup against the corpus fingerprint index
+      val exact = marker.counted("exact", Dedup.dedupDelta(spanGated, state.fingerprints, textCol, idCol))
+      marker.drop(spanGated)
 
-    // 4. near-dup against corpus + within delta, optional edit verify.
-    // When the state carries the published prefix-posting index, pair
-    // generation SERVES from it (the corpus shingle table + frozen df
-    // sidecar read as parquet scans) instead of re-tokenizing the corpus
-    // text inside the run — bit-identical pairs (strings/ints round-trip
-    // parquet exactly; the prefix order is the same frozen df), one
-    // posting subtree on the serve path instead of the 3-4 planned
-    // derivations the r16 probe measured.
-    val rawPairs = state.nearDupIndex match {
-      case Some(ix) =>
-        require(ix.n == cfg.ngramN,
-          s"near-dup index shingle width ${ix.n} != config ngramN ${cfg.ngramN}")
-        Dedup.nearDupDeltaIndexed(ix, exact, idCol, textCol,
-          threshold = cfg.nearDupJaccard)
-      case None => Dedup.nearDupDelta(state.docs, exact, idCol, textCol,
-        n = cfg.ngramN, threshold = cfg.nearDupJaccard)
-    }
-    val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
-      val texts = state.docs.unionByName(exact.select(id, col(textCol)))
-      val ta = texts.select(id.as("id_a"), col(textCol).as("__ta"))
-      val tb = texts.select(id.as("id_b"), col(textCol).as("__tb"))
-      val bound = ceil(lit(maxRatio) *
-        greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
-      val dist = org.apache.spark.sql.graftbridge.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.Levenshtein(
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__ta")),
-          org.apache.spark.sql.graftbridge.Bridge.expression(col("__tb")),
-          Some(org.apache.spark.sql.graftbridge.Bridge.expression(bound))))
-      rawPairs.join(ta, "id_a").join(tb, "id_b")
-        .filter(dist >= 0 && dist.cast("double") <=
-          lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
+      // 4. near-dup against corpus + within delta, optional edit verify.
+      // When the state carries the published prefix-posting index, pair
+      // generation SERVES from it (the corpus shingle table + frozen df
+      // sidecar read as parquet scans) instead of re-tokenizing the corpus
+      // text inside the run — bit-identical pairs (strings/ints round-trip
+      // parquet exactly; the prefix order is the same frozen df), one
+      // posting subtree on the serve path instead of the 3-4 planned
+      // derivations the r16 probe measured.
+      val rawPairs = state.nearDupIndex match {
+        case Some(ix) =>
+          require(ix.n == cfg.ngramN,
+            s"near-dup index shingle width ${ix.n} != config ngramN ${cfg.ngramN}")
+          Dedup.nearDupDeltaIndexed(ix, exact, idCol, textCol,
+            threshold = cfg.nearDupJaccard)
+        case None => Dedup.nearDupDelta(state.docs, exact, idCol, textCol,
+          n = cfg.ngramN, threshold = cfg.nearDupJaccard)
+      }
+      val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
+        val texts = state.docs.unionByName(exact.select(id, col(textCol)))
+        val ta = texts.select(id.as("id_a"), col(textCol).as("__ta"))
+        val tb = texts.select(id.as("id_b"), col(textCol).as("__tb"))
+        val bound = ceil(lit(maxRatio) *
+          greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
+        val dist = Bridge.column(
+          org.apache.spark.sql.catalyst.expressions.Levenshtein(
+            Bridge.expression(col("__ta")),
+            Bridge.expression(col("__tb")),
+            Some(Bridge.expression(bound))))
+        rawPairs.join(ta, "id_a").join(tb, "id_b")
+          .filter(dist >= 0 && dist.cast("double") <=
+            lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
+          .select(col("id_a"), col("id_b"), col("jaccard"))
+      })
+      // delta docs linked to a corpus doc drop outright; delta-only pairs
+      // cluster and keep the min-id canonical, as the batch stage does
+      val corpusIds = state.docs.select(id.as("__cid"))
+      val corpusLinked =
+        pairs.join(corpusIds, pairs("id_a") === col("__cid"), "left_semi")
+          .select(col("id_b").as(idCol))
+        .unionByName(
+          pairs.join(corpusIds, pairs("id_b") === col("__cid"), "left_semi")
+            .select(col("id_a").as(idCol)))
+        .distinct()
+      val deltaPairs = pairs
+        .join(corpusIds, pairs("id_a") === col("__cid"), "left_anti")
+        .join(corpusIds, pairs("id_b") === col("__cid"), "left_anti")
         .select(col("id_a"), col("id_b"), col("jaccard"))
-    })
-    // delta docs linked to a corpus doc drop outright; delta-only pairs
-    // cluster and keep the min-id canonical, as the batch stage does
-    val corpusIds = state.docs.select(id.as("__cid"))
-    val corpusLinked =
-      pairs.join(corpusIds, pairs("id_a") === col("__cid"), "left_semi")
-        .select(col("id_b").as(idCol))
-      .unionByName(
-        pairs.join(corpusIds, pairs("id_b") === col("__cid"), "left_semi")
-          .select(col("id_a").as(idCol)))
-      .distinct()
-    val deltaPairs = pairs
-      .join(corpusIds, pairs("id_a") === col("__cid"), "left_anti")
-      .join(corpusIds, pairs("id_b") === col("__cid"), "left_anti")
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    val canonical = Dedup.nearDupClusters(exact, idCol, deltaPairs)
-      .filter(col("is_canonical")).select(id)
-    val deduped = mark("neardup", exact
-      .join(corpusLinked, Seq(idCol), "left_anti")
-      .join(canonical, Seq(idCol), "left_semi"))
-    drop(exact) // pairs checkpointed, clusters collected — exact is done
+      val canonical = Dedup.nearDupClusters(exact, idCol, deltaPairs)
+        .filter(col("is_canonical")).select(id)
+      val deduped = marker.counted("neardup", exact
+        .join(corpusLinked, Seq(idCol), "left_anti")
+        .join(canonical, Seq(idCol), "left_semi"))
+      marker.drop(exact) // pairs checkpointed, clusters collected — exact is done
 
-    // 5. decontaminate (same canonicalization on the benchmark side)
-    val benchCanon = benchmark.select(col(idCol),
-      TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
-    val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
-      n = cfg.ngramN, threshold = cfg.contaminationMax)
-      .select(col("doc_id").as(idCol)).distinct()
-    val clean = mark("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
-    drop(deduped)
+      // 5. decontaminate (same canonicalization on the benchmark side)
+      val benchCanon = benchmark.select(col(idCol),
+        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
+      val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
+        n = cfg.ngramN, threshold = cfg.contaminationMax)
+        .select(col("doc_id").as(idCol)).distinct()
+      val clean = marker.counted("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
+      marker.drop(deduped)
 
-    // 6-7. per-row split; pack CONTINUES the corpus's shard streams
-    val split = markSplit(Split.assignSplit(clean, id, cfg.splits), persist, audit, deltaStorageLevel)
-    drop(clean)
-    val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
-      .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-    val packed = markPacked(Pack.packSequences(trainTokens, idCol, "n_tokens",
-      cfg.seqBudget, cfg.packShards, shardOffsets = Some(state.shardOffsets)), persist, audit, deltaStorageLevel)
-    Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
-      counts = audit.toMap)
+      // 6-7. per-row split; pack CONTINUES the corpus's shard streams
+      val split = marker(Split.assignSplit(clean, id, cfg.splits))(marker.splitCounts)
+      marker.drop(clean)
+      val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
+        .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+      val packed = marker(Pack.packSequences(trainTokens, idCol, "n_tokens",
+        cfg.seqBudget, cfg.packShards, shardOffsets = Some(state.shardOffsets)))(marker.packedStats)
+      Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
+        counts = marker.audit.toMap)
+    }
   }
 }

@@ -216,6 +216,23 @@ class CurationSpec extends SparkSpec {
     assert(stored.packed.collect().toSet === cached.packed.collect().toSet)
   }
 
+  test("persist + release stages: a failing stage leaves no cache entry behind") {
+    // one raise_error row fails the run at the input boundary, then at the
+    // decontamination boundary — after five stages and the near-dup
+    // components were cached. Every stage still held is released on the
+    // way out. repartition keeps the optimizer from folding the local rows
+    // at plan time.
+    val before = cachedEntries
+    def boom(df: org.apache.spark.sql.DataFrame, id: Long) = df.repartition(2)
+      .withColumn("text", when($"doc_id" === id, raise_error(lit("stage boom"))).otherwise($"text"))
+    for ((docs, bench) <- Seq((boom(corpus, 2L), benchmark), (corpus, boom(benchmark, 100L)))) {
+      val e = intercept[Exception](Curation.stages(docs, bench, "doc_id", "text",
+        persist = true, release = true))
+      assert(raisedWith(e, "stage boom"), e.toString)
+      assert(cachedEntries === before)
+    }
+  }
+
   test("storage-mode stages resume mid-pipeline: surviving prefix untouched, output bit-identical") {
     def rmrf(f: java.io.File): Unit = {
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmrf)

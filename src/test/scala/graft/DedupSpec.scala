@@ -295,6 +295,19 @@ class DedupSpec extends SparkSpec {
       "second durable call clobbered the first call's unconsumed result")
   }
 
+  test("connectedComponents: a failing job leaves no cache entry behind") {
+    // the raise_error row fails the init materialization; the persisted
+    // edge frame must be released on that path too (a job-group cancel in
+    // a long-lived session fails the same way). repartition keeps the
+    // optimizer from folding the local rows at plan time.
+    val before = cachedEntries
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b").repartition(2)
+      .withColumn("id_b", when($"id_a" === 7L, raise_error(lit("cc boom"))).otherwise($"id_b"))
+    val e = intercept[Exception](Dedup.connectedComponents(pairs))
+    assert(raisedWith(e, "cc boom"), e.toString)
+    assert(cachedEntries === before)
+  }
+
   test("nearDupClusters: one canonical per cluster, singletons canonical, via real pair ops") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.15)
     val clusters = Dedup.nearDupClusters(docs, "doc_id", pairs)

@@ -27,6 +27,16 @@ abstract class SparkSpec extends AnyFunSuite
     * persisting their stage chains. Same discipline as Bench's
     * inter-entry isolation.
     */
+  /** Entries in the shared session's CacheManager — a failed operator
+    * must leave this where it found it.
+    */
+  def cachedEntries: Int = org.apache.spark.sql.graftbridge.CacheEntries(spark)
+
+  /** `t` or one of its causes carries `msg` (task failures arrive wrapped). */
+  def raisedWith(t: Throwable, msg: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains(msg)))
+
   override protected def afterAll(): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     spark.catalog.clearCache()
