@@ -1,6 +1,16 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 object Bench {
+  /** One entry's measurement: the min timed run's seconds, the relative
+    * spread across timed runs, the min run's GC seconds, and the
+    * generated classes compiled (count, seconds) over all timed runs —
+    * the per-entry codegen layer (a warm entry should compile ~0).
+    */
+  private final case class Measured(min: Double, spread: Double, gc: Double,
+                                    compiles: Long, compileS: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -87,13 +97,15 @@ object Bench {
     // below re-measures an entry under the IDENTICAL protocol.
     def measureEntry(name: String,
                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double) = {
+        : Measured = {
       // stop at the first failure: one -1 already poisons the query's
       // result, so re-running a known-failed (possibly slow-to-fail) query
       // runs-1 more times buys nothing
       isolate()
       val times = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
       var failed = false
+      var compiles = 0L
+      var compileNs = 0L
       // one UNTIMED warmup run per entry: first-run-only cost (parquet
       // footer reads, codegen compilation for this entry's plan shapes)
       // otherwise lands inside the timed window and shows up as the
@@ -110,6 +122,8 @@ object Bench {
         // without this a sub-second entry occasionally eats a multi-second
         // stall on its first job and reads as a 5× spread
         spark.range(1).count()
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val cNs0 = CodeGenerator.compileTime
         val g0 = gcMs()
         val t0 = System.nanoTime()
         try {
@@ -119,6 +133,8 @@ object Bench {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); failed = true
         }
+        compiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        compileNs += CodeGenerator.compileTime - cNs0
         i += 1
       }
       // (min, relative spread, gc-of-min-run): min is the deterministic-
@@ -126,12 +142,12 @@ object Bench {
       // — a large value says this entry's number is scheduling/GC noise,
       // not plan cost; the min run's GC seconds say how much of even the
       // best run was collector time (heap-pressure witness)
-      if (failed) (-1.0, -1.0, 0.0)
+      if (failed) Measured(-1.0, -1.0, 0.0, compiles, compileNs / 1e9)
       else {
         val best = times.minBy(_._1)
-        (best._1,
+        Measured(best._1,
           if (best._1 > 0) (times.map(_._1).max - best._1) / best._1 else 0.0,
-          best._2)
+          best._2, compiles, compileNs / 1e9)
       }
     }
     // qc01 stage-level cost attribution: the entry is ~18% of the catalog
@@ -224,15 +240,15 @@ object Bench {
     // quiet number whichever window was calmer.
     val bandExceeded = (if (bandsCalibrated) persistHeavy else Map.empty[String, Double])
       .filter { case (n, band) =>
-        firstPass.get(n).exists(m => m._1 >= 0 && m._1 > band * 1.2)
+        firstPass.get(n).exists(m => m.min >= 0 && m.min > band * 1.2)
       }.keys.toSeq.sorted
     // name -> (first-pass measurement, requeued measurement); empty on a
-    // quiet run. Each measurement is (min, spread, gcOfMin).
-    val contendedPairs: Map[String, ((Double, Double, Double), (Double, Double, Double))] =
+    // quiet run.
+    val contendedPairs: Map[String, (Measured, Measured)] =
       if (sentinelRatio > 1.2 || bandExceeded.nonEmpty) {
         val targets =
           if (sentinelRatio > 1.2)
-            persistHeavy.keys.toSeq.sorted.filter(n => firstPass.get(n).exists(_._1 >= 0))
+            persistHeavy.keys.toSeq.sorted.filter(n => firstPass.get(n).exists(_.min >= 0))
           else bandExceeded
         System.err.println(s"[bench] requeueing ${targets.size} persist-heavy " +
           s"entries (sentinel_ratio ${f"$sentinelRatio%.2f"}" +
@@ -251,7 +267,7 @@ object Bench {
         // adopt the requeued measurement WHOLESALE (min + its spread + its
         // gc) when its min is lower — mixing the first pass's witnesses
         // with the requeue's min would pair readings from different windows
-        case Some((_, req)) if req._1 >= 0 && req._1 < first._1 => n -> req
+        case Some((_, req)) if req.min >= 0 && req.min < first.min => n -> req
         case _ => n -> first
       }
     }
@@ -265,27 +281,27 @@ object Bench {
       "short query ids collide; bench line would drop a query")
     def fmt(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, (v, _, _)) => "\"" + shortId(k) + "\":" + fmt(v) }
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + fmt(m.min) }
       .mkString("{", ",", "}")
     // Noise report, budgeted for the driver's ~2000-byte stdout window:
     // the WORST relative spreads (capped at 8 entries, 2 decimals) plus the
     // overall max — enough to tell a real regression (spread small, min
     // moved) from measurement noise (spread large) without doubling the
     // line. -1 (failed) entries are excluded; they're already flagged.
-    val spreads = results.toSeq.filter(_._2._2 >= 0)
-    val worst = spreads.sortBy(-_._2._2).take(8)
-      .map { case (k, (_, s, _)) => "\"" + shortId(k) + "\":" + f"$s%.2f" }
+    val spreads = results.toSeq.filter(_._2.spread >= 0)
+    val worst = spreads.sortBy(-_._2.spread).take(8)
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + f"${m.spread}%.2f" }
       .mkString("{", ",", "}")
-    val spreadMax = if (spreads.isEmpty) 0.0 else spreads.map(_._2._2).max
+    val spreadMax = if (spreads.isEmpty) 0.0 else spreads.map(_._2.spread).max
     // GC witness: seconds the collector took INSIDE each entry's best
     // timed run (top 6) + the sum over all entries. A healthy run carries
     // near-zero; a memory-pressured environment shows the amplification
     // here instead of leaving a 2-3× mystery in the totals.
-    val gcs = results.toSeq.filter(_._2._1 >= 0)
-    val gcWorst = gcs.sortBy(-_._2._3).take(6)
-      .map { case (k, (_, _, g)) => "\"" + shortId(k) + "\":" + f"$g%.2f" }
+    val gcs = results.toSeq.filter(_._2.min >= 0)
+    val gcWorst = gcs.sortBy(-_._2.gc).take(6)
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + f"${m.gc}%.2f" }
       .mkString("{", ",", "}")
-    val gcTotal = gcs.map(_._2._3).sum
+    val gcTotal = gcs.map(_._2.gc).sum
     // machine-state stamp at report time: available memory + 1-min load
     // (best-effort; absent on non-Linux)
     def readFile(p: String): String = {
@@ -301,8 +317,8 @@ object Bench {
     } catch { case _: Throwable => "{}" }
     // any failure invalidates the run: report total=-1 (a smaller-but-
     // incomplete sum would read as a FASTER run to a total-only gate)
-    val failures = results.count(_._2._1 < 0)
-    val total = if (failures > 0) -1.0 else results.values.map(_._1).sum
+    val failures = results.count(_._2.min < 0)
+    val total = if (failures > 0) -1.0 else results.values.map(_.min).sum
     // Two artifacts, two budgets. The FILE is canonical and unbounded:
     // full 3-decimal timings plus the complete per-entry GC map (the
     // contention fingerprint rides the artifact, not just its top-6).
@@ -315,7 +331,14 @@ object Bench {
     // so nothing can land between it and process exit except sbt's own
     // epilogue, which the budget now accounts for.
     val gcByQuery = gcs.sortBy(_._1)
-      .map { case (k, (_, _, g)) => "\"" + shortId(k) + "\":" + f"$g%.3f" }
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + f"${m.gc}%.3f" }
+      .mkString("{", ",", "}")
+    // generated classes compiled over each entry's timed runs (file
+    // artifact only): count and compile seconds, from the JVM-wide
+    // CodegenMetrics / CodeGenerator counters
+    val codegenByQuery = results.toSeq.sortBy(_._1)
+      .map { case (k, m) => "\"" + shortId(k) + "\":{\"classes\":" + m.compiles +
+        ",\"compile_s\":" + f"${m.compileS}%.3f" + "}" }
       .mkString("{", ",", "}")
     val sentinelJson = sents.map(v => f"$v%.3f").mkString("[", ",", "]")
     // full contention-requeue record (file artifact only — unbounded):
@@ -323,8 +346,8 @@ object Bench {
     // sentinel ratio, so a reader can adjudicate which window was quiet
     val contendedJson = contendedPairs.toSeq.sortBy(_._1)
       .map { case (k, (f1, r)) =>
-        "\"" + shortId(k) + "\":{\"first\":" + f"${f1._1}%.3f" +
-          ",\"requeued\":" + f"${r._1}%.3f" + "}" }
+        "\"" + shortId(k) + "\":{\"first\":" + f"${f1.min}%.3f" +
+          ",\"requeued\":" + f"${r.min}%.3f" + "}" }
       .mkString("{", ",", "}")
     // qc01 per-stage wall seconds (file artifact only): insertion order =
     // pipeline order, so the JSON reads as the stage sequence
@@ -334,6 +357,7 @@ object Bench {
     val fileLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
       s""""runs":$runs,"spread_max":${f"$spreadMax%.2f"},"spread_worst":$worst,""" +
       s""""gc_sec":${f"$gcTotal%.2f"},"gc_worst":$gcWorst,"gc_by_query":$gcByQuery,""" +
+      s""""codegen":$codegenByQuery,""" +
       s""""sentinel":$sentinelJson,"sentinel_ratio":${f"$sentinelRatio%.2f"},""" +
       s""""contended":$contendedJson,"requeue_sentinel_ratio":${f"$requeueSentRatio%.2f"},""" +
       s""""qc01_stages":$qc01StagesJson,""" +
@@ -348,7 +372,7 @@ object Bench {
         if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
       }
     val qs2 = results.toSeq.sortBy(_._1)
-      .map { case (k, (v, _, _)) => "\"" + shortId(k) + "\":" + fmt2(v) }
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + fmt2(m.min) }
       .mkString("{", ",", "}")
     // contention witnesses on the PARSED line (the driver keeps only the
     // last ~2000 stdout bytes; budget audited below): sentinel_ratio plus
@@ -357,8 +381,8 @@ object Bench {
     // live in the file artifact). Read rule: sentinel_ratio > 1.3 ⇒ the
     // machine was contended, discount the persist-heavy entries
     // (docs/SCALE.md).
-    val gcHot = gcs.filter(_._2._3 >= 0.05).sortBy(-_._2._3).take(5)
-      .map { case (k, (_, _, g)) => "\"" + shortId(k) + "\":" + f"$g%.2f" }
+    val gcHot = gcs.filter(_._2.gc >= 0.05).sortBy(-_._2.gc).take(5)
+      .map { case (k, m) => "\"" + shortId(k) + "\":" + f"${m.gc}%.2f" }
       .mkString("{", ",", "}")
     // compact requeue witness for the parsed line (the full first/requeued
     // pairs live in the file artifact): how many entries were requeued and

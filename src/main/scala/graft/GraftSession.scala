@@ -9,8 +9,22 @@ import org.apache.spark.sql.SparkSession
   * transfer to a real cluster: AQE on (runtime re-planning, skew-join
   * handling), shuffle partitions sized to cores (local) — on a cluster AQE
   * coalesces post-shuffle partitions anyway.
+  *
+  * `spark.sql.codegen.cache.maxEntries` is a static conf: Spark reads it
+  * once, when the JVM-wide generated-class cache is first built, so it
+  * takes effect only when this builder creates the JVM's first session. A
+  * caller embedding graft in an existing SparkContext must set it on their
+  * own SparkConf (`CodegenCacheEntries`).
   */
 object GraftSession {
+  /** Generated-class cache size. One pipelines pass (qc01 + q50) needs
+    * about 256 distinct classes: more than Spark's default 100, and the
+    * passes cycle through them in the same order, so the LRU missed on
+    * every class and each warm pass recompiled about 230 of them. 1024 is
+    * four times that working set.
+    */
+  val CodegenCacheEntries: Int = 1024
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               // non-numeric env (e.g. SPARK_GRAFT_CPUS='*' for local[*]) → default 32
               shufflePartitions: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)): SparkSession.Builder =
@@ -35,6 +49,7 @@ object GraftSession {
       // reads intact and bounds the pathological case.
       .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()
