@@ -14,7 +14,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.benchBuilder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // pay session/codegen/parquet-reader/join/window machinery warmup once,
     // outside any timing, on the tiny region/nation tables

@@ -51,6 +51,16 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
+  /** The bench's session: `local[$SPARK_GRAFT_CPUS]` (default 4) with one
+    * shuffle partition per core. `graft.Bench` times under it, and
+    * `graft.Probe` takes its job counts and plans from it, so plan evidence
+    * describes the configuration the bench measures.
+    */
+  def benchBuilder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    builder(s"local[$cpus]", cpus.toInt)
+  }
+
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -511,7 +511,7 @@ object Dedup {
           // canonicalizes the key onto the `component` alias (id ≡
           // component at init), and hash(component) then fails the round
           // join's hash(id) requirement by exprId — one avoidable exchange
-          // on round 1 (PartProbe/JobsProbe broadcast-off dumps).
+          // on round 1 (seen in broadcast-off per-action plan dumps).
           // A NOOP-SINK write, not a count: count plans a two-stage
           // aggregate for a value nobody reads; the noop write computes
           // every column in ONE job (guide §1.4)

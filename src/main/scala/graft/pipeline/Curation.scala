@@ -34,20 +34,18 @@ object Curation {
     * cache holds corpus-sized byte-array batches on the heap; under memory
     * pressure those blocks are exactly what the collector scans and what
     * amplified the composed entries 2-3× in contended environments
-    * (docs/SCALE.md round-9/10 contention notes). Env-selectable
-    * (`SPARK_GRAFT_CACHE_LEVEL`) so the ScaleProbe `contended` harness can
-    * A/B levels without a rebuild. Default chosen by that harness's
-    * round-10 qc01 measurements under the calibrated adversary (2 GB
-    * ballast + 512 MB/s churn + 16 bandwidth hogs on 32 cpus):
-    * MEMORY_AND_DISK 31.3→39.4 s (1.26×), MEMORY_AND_DISK_SER 28.8→32.5 s
-    * (1.13×), DISK_ONLY 31.7→47.0 s (1.48× — spilled reads traverse the
-    * same contended memory subsystem, and lose the cache hits too).
-    * Serialized wins BOTH regimes: compact batches shrink the scannable
-    * heap (GC) and the resident bytes the adversary can evict.
+    * (docs/SCALE.md round-9/10 contention notes). Chosen by the round-10
+    * qc01 contention A/B under the calibrated adversary (2 GB ballast +
+    * 512 MB/s churn + 16 bandwidth hogs on 32 cpus; docs/SCALE.md
+    * "Round-10 delta: contention-robustness"): MEMORY_AND_DISK 31.3→39.4 s
+    * (1.26×), MEMORY_AND_DISK_SER 28.8→32.5 s (1.13×), DISK_ONLY
+    * 31.7→47.0 s (1.48× — spilled reads traverse the same contended memory
+    * subsystem, and lose the cache hits too). Serialized wins BOTH
+    * regimes: compact batches shrink the scannable heap (GC) and the
+    * resident bytes the adversary can evict.
     */
-  private[graft] def stageStorageLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_LEVEL", "MEMORY_AND_DISK_SER"))
+  private[graft] val stageStorageLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** Storage level for the DELTA pipeline's stage caches. Measured the
     * other way from the batch default on the same adversary: qc02 at
@@ -58,9 +56,8 @@ object Curation {
     * the contended regime has least to spare. Corpus-sized state is NOT
     * affected: it arrives via [loadState] as parquet scans.
     */
-  private[graft] def deltaStorageLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_DELTA_CACHE_LEVEL", "MEMORY_AND_DISK"))
+  private[graft] val deltaStorageLevel: org.apache.spark.storage.StorageLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   case class Config(
       minTokens: Int = 10,
@@ -358,7 +355,8 @@ object Curation {
       // production dedup threshold the prefix indexes ~15-30% of each doc
       // and hot boilerplate shingles sort to the unindexed tail, which is
       // the regime a real corpus (and this fixture's ~31-word vocabulary)
-      // lives in — see ScaleProbe `jaccard` / docs/SCALE.md.
+      // lives in — see docs/SCALE.md "Round-6 delta: prefix filtering's
+      // crossover".
       // Optional verify stage: confirm Jaccard candidates by edit distance
       // (normalized by the longer text) before they merge clusters
       val rawPairs = Dedup.ngramJaccardPairsPrefix(exact, idCol, textCol,

@@ -538,8 +538,8 @@ object Extras {
 
     // Production-mode probe (rows are still hash-oracled): plain
     // combinable SUM folds instead of oracle-mode's sorted folds — the
-    // cost a real caller pays (the sorted fold was measured at 1.9×, see
-    // ScaleProbe pagerank / docs/SCALE.md). Output is the top-20 node SET
+    // cost a real caller pays (the sorted fold was measured at 1.9×,
+    // docs/SCALE.md "Round-8 delta (third pass)"). Output is the top-20 node SET
     // with ranks recomputed over the 6-decimal-rounded scores (node-id
     // tiebreak), so the ≤1-ulp partial-sum nondeterminism the production
     // fold allows is absorbed by the rounding and the row set stays
@@ -651,9 +651,10 @@ object Extras {
     */
   private val edgeStore = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** The distinct both-direction edge frame itself — ONE definition, shared
-    * by the store builder below and by ScaleProbe's build-cost probe, so
-    * what the probe prices is by construction what the entries serve.
+  /** The distinct both-direction edge frame itself — ONE definition, used
+    * by the store builder below, so what the store holds is by construction
+    * what the entries serve (build cost: docs/SCALE.md "Round-9 delta: the
+    * trade graph becomes a persisted store").
     */
   private[graft] def buildTradeEdges(s: SparkSession, d: String): DataFrame = {
     // BIGINT node ids, sign-tagged (the synthesizer's negative-sentinel

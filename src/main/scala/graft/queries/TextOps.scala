@@ -517,9 +517,9 @@ object TextOps {
   private[graft] val RagDim = 16
   private[graft] val RagK = 10
 
-  /** qr01's chunk store, pre-checkpoint — ONE definition shared with
-    * ScaleProbe's qr01 decomposition so the probe prices exactly the
-    * store the entries build.
+  /** qr01's chunk store, pre-checkpoint — ONE definition shared by the
+    * inline retrieval chain and the persisted index stores, so every
+    * retrieval entry reads exactly the chunks the others build.
     */
   private[graft] def ragChunkStore(s: SparkSession, d: String): DataFrame =
     graft.operators.Pack.chunkTokens(T(s, d, "documents"), "doc_id", "text",
@@ -723,9 +723,10 @@ object TextOps {
     // was first-run cost inside the timed window, gone since the bench
     // warms each entry untimed). On a hot-shingle corpus the plain index
     // explodes quadratically while the prefix path stays near-linear
-    // (9.4× at 12k boilerplate docs and diverging — ScaleProbe `jaccard`
-    // mode, docs/SCALE.md). At 100 TB the corpus IS hot-shingle-heavy,
-    // which is why this is the exact scale path.
+    // (9.4× at 12k boilerplate docs and diverging — docs/SCALE.md
+    // "Round-6 delta: prefix filtering's crossover"). At 100 TB the
+    // corpus IS hot-shingle-heavy, which is why this is the exact scale
+    // path.
     "qt05p_ngram_jaccard_prefix" -> ((s, d) =>
       Dedup.ngramJaccardPairsPrefix(T(s, d, "documents"), "doc_id", "text",
         n = 3, threshold = 0.7, blockCols = Seq("lang"))),

@@ -10,10 +10,11 @@
 #
 # Base defaults to sf0.1 — the base every exponent probe and parity
 # sweep since round 10 has used (10x = 10 disjoint re-keyed copies of
-# sf0.1; see ScaleProbe.synthFixture for the re-keying rules).
+# sf0.1; see Probe.synthFixture for the re-keying rules).
 #
 # Knobs (env, all optional):
-#   GRAFT_SWEEP_CPUS     local[N] for the Spark dump (default 16)
+#   GRAFT_SWEEP_CPUS     local[N] for the synthesis and the Spark dump
+#                        (default 16)
 #   GRAFT_ORACLE_TIMEOUT per-oracle wall cap, seconds (default 400)
 #   GRAFT_ENTRY_TIMEOUT  per-ENTRY Spark wall cap, seconds (default 900)
 #                        — a capacity-bound entry at the scale fixture
@@ -52,8 +53,9 @@ CPUS="${GRAFT_SWEEP_CPUS:-16}"
 TIMEOUT="${GRAFT_ORACLE_TIMEOUT:-400}"
 ENTRY_TIMEOUT="${GRAFT_ENTRY_TIMEOUT:-900}"
 MEM="${GRAFT_DUCKDB_MEM:-70GB}"
-# spill-aware shuffle sizing (the exponent probe's rule): partitions ride
-# the fixture — 32 at <=10x, 32*copies/10 above, so per-task sort volume
+# spill-aware shuffle sizing (the rule of the round-10 scale-exponent
+# runs, docs/SCALE.md): partitions ride the fixture — 32 at <=10x,
+# 32*copies/10 above, so per-task sort volume
 # stays roughly constant as the corpus grows
 SHUF=$(( 32 * (COPIES > 10 ? COPIES / 10 : 1) ))
 FIXTURE="/tmp/graft_sweep_${COPIES}x"
@@ -72,14 +74,15 @@ else
   # stamp is written only after EVERY table synthFixture emits exists, so a
   # crash between tables can never cache a partial fixture for later sweeps
   SYNTHLOG="/tmp/graft_sweep_synth_${TAG}.log"
-  sbt -batch "runMain graft.ScaleProbe synth ${BASE} ${COPIES} ${FIXTURE}" \
+  env SPARK_GRAFT_CPUS="${CPUS}" \
+    sbt -batch "runMain graft.Probe synth ${BASE} ${COPIES} ${FIXTURE}" \
     > "${SYNTHLOG}" 2>&1 || {
     echo "[sweep] synthesis ABORTED (sbt failure) — see ${SYNTHLOG}" >&2
     grep -E '"probe"|error|OutOfMemory|Killed' "${SYNTHLOG}" | tail -20 >&2
     exit 1
   }
   grep -E '"probe"' "${SYNTHLOG}" || true
-  # keep in sync with ScaleProbe.synthFixture's keyCols + verbatim
+  # keep in sync with Probe.synthFixture's keyCols + verbatim
   for t in documents embeddings orders lineitem customer supplier events \
            nation region part; do
     test -d "${FIXTURE}/${t}.parquet" || {
