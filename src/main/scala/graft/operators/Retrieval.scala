@@ -114,7 +114,9 @@ object Retrieval {
     * (re-scoring a corpus slice, offline eval sweeps) whose term join goes
     * sort-merge: the postings side then reads co-partitioned, and the
     * exchange that grows with the INDEX (not the queries) vanishes
-    * (PlanSpec gates it).
+    * (PlanSpec gates it). Both parts get the saving session's
+    * `spark.sql.shuffle.partitions` buckets ([graft.sources.Artifacts]),
+    * so serve from a session configured like the one that saved.
     */
   def saveBm25Index(index: Bm25Index, dir: String, bucketed: Boolean): Unit = {
     val byTerm = Option.when(bucketed)("term")

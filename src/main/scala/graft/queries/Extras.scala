@@ -681,7 +681,8 @@ object Extras {
     * per entry, and a plain parquet scan re-shuffles the edge side every
     * time — the shuffle that grows linearly with the corpus and is why
     * the graph entries topped the round-10 scale-exponent table. A
-    * bucketed scan reports hash(src, 32) and those exchanges vanish
+    * bucketed scan reports hash(src, n), n the building session's
+    * shuffle partitions, and those exchanges vanish
     * (PlanSpec gates it); at cluster scale this is exactly "bucket the
     * edge table by src so iterations co-locate", the layout decision made
     * once at store-build time. The catalog entry is per-session metadata

@@ -22,6 +22,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * catalog tables — bucket metadata lives in the catalog, not the files —
   * from the record the writer produced. No temp-dir rename: bucketed
   * catalog tables pin their LOCATION.
+  *
+  * A bucketed part has as many buckets as the WRITING session's
+  * `spark.sql.shuffle.partitions`, and the manifest records that count, so
+  * a reader re-registers the layout the writer chose. A consumer's one
+  * shuffle then lands on the partitioning the store has, and a small
+  * session pays no per-bucket task overhead for a count sized to a large
+  * one. The count is fixed at write time. A reader with fewer partitions
+  * than the store has buckets still reads it bucketed (Spark keeps the
+  * store's partitioning and shuffles the other side to match). A reader
+  * with MORE partitions that joins the store against a side already
+  * hash-partitioned at its own count re-shuffles the store side to that
+  * count; where that read recurs, rebuild the store in the reading
+  * configuration.
   */
 object Artifacts {
 
@@ -37,11 +50,6 @@ object Artifacts {
     def apply(part: String): DataFrame = parts(part)
     def param(key: String): String = params(key)
   }
-
-  /** The one bucket count; 32 matches the production shuffle.partitions,
-    * so a consumer's one shuffle lands on the partitioning the store has.
-    */
-  val Buckets = 32
 
   private[graft] val ManifestName = "_graft_manifest"
   private val Magic = "graft-artifact 1"
@@ -77,14 +85,15 @@ object Artifacts {
     (previous ++ parts.map(_.name)).distinct
       .foreach(p => spark.sql(s"DROP TABLE IF EXISTS ${tableName(dir, p)}"))
     fs.delete(root, true)
+    val buckets = spark.sessionState.conf.numShufflePartitions
     parts.foreach { p =>
       p.bucketKey match {
         case Some(key) =>
           // repartition on the bucket column first: writer hash ==
           // bucketing hash, so each task holds exactly one bucket and the
-          // part is `Buckets` files, not fragments per task×bucket
-          p.df.repartition(Buckets, col(key)).write
-            .bucketBy(Buckets, key).sortBy(key)
+          // part is `buckets` files, not fragments per task×bucket
+          p.df.repartition(buckets, col(key)).write
+            .bucketBy(buckets, key).sortBy(key)
             .option("path", s"$dir/${p.name}").saveAsTable(tableName(dir, p.name))
         case None => p.df.write.parquet(s"$dir/${p.name}")
       }
@@ -92,7 +101,7 @@ object Artifacts {
     val lines = Seq(Magic, s"kind\t$kind") ++
       params.toSeq.sorted.map { case (k, v) => s"param\t$k\t$v" } ++
       parts.map(p => s"part\t${p.name}\t${p.bucketKey.getOrElse("")}\t" +
-        s"${if (p.bucketKey.isEmpty) 0 else Buckets}\t${p.df.schema.json}") :+ "end"
+        s"${if (p.bucketKey.isEmpty) 0 else buckets}\t${p.df.schema.json}") :+ "end"
     val out = fs.create(new Path(root, ManifestName), true)
     try out.write(lines.mkString("", "\n", "\n").getBytes(UTF_8)) finally out.close()
   }

@@ -37,6 +37,67 @@ class ArtifactsSpec extends SparkSpec {
     dir
   }
 
+  /** Run `body` with the session's shuffle partitions set to `n`. */
+  private def atPartitions[A](n: Int)(body: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The final (post-AQE) executed plan of `df`, after running it. */
+  private def finalPlan(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
+  test("bucket count: a bucketed part holds the writing session's shuffle partitions") {
+    val suiteCount = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for (n <- Seq(suiteCount, 8)) {
+      val dir = tmp("graft_layout")
+      // 400 distinct keys: every one of n hash buckets receives rows
+      atPartitions(n)(Artifacts.write(dir, "layout",
+        Seq(Artifacts.Part("p", spark.range(400).toDF("k"), Some("k")))))
+      assert(spark.conf.get("spark.sql.shuffle.partitions").toInt === suiteCount)
+      val files = new java.io.File(dir, "p").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet"))
+      val bucketIds = files.map(f => ".*_(\\d+)(?:\\..*)?$".r.findFirstMatchIn(f).get.group(1).toInt)
+      assert(files.length === n, s"expected $n bucket files, found ${files.mkString(", ")}")
+      assert(bucketIds.toSet === (0 until n).toSet)
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, Artifacts.ManifestName)), "UTF-8")
+      assert(manifest.split("\n").exists(_.startsWith(s"part\tp\tk\t$n\t")), manifest)
+    }
+  }
+
+  test("cross-session read: a store saved at 8 partitions serves bucketed in the 4-partition session") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    val q = Seq((7L, "quick brown fox"), (8L, "seven eight nine")).toDF("query_id", "qtext")
+    val built = Retrieval.bm25Index(corpus)
+    val inSession = Retrieval.bm25TopKIndexed(built, q, k = 3).collect().toSet
+    val dir = tmp("graft_bm25_x")
+    atPartitions(8)(Retrieval.saveBm25Index(built, dir, bucketed = true))
+    // a fresh session knows only the files: re-register from the manifest
+    Seq("postings", "dfreq").foreach(p => spark.sql("DROP TABLE " + Artifacts.tableName(dir, p)))
+    val reloaded = Retrieval.loadBm25Index(spark, dir)
+    assert(Retrieval.bm25TopKIndexed(reloaded, q, k = 3).collect().toSet === inSession)
+
+    val terms = Seq("quick", "seven", "nine").toDF("term")
+    val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      // the store keeps its 8 buckets; only the query side is shuffled, to 8
+      val p = finalPlan(reloaded.postings.join(terms, "term"))
+      assert(p.contains("SelectedBucketsCount"), s"postings scan is not bucketed:\n$p")
+      val termEx = "Exchange hashpartitioning\\(term#\\d+, (\\d+)".r.findAllMatchIn(p).map(_.group(1)).toList
+      assert(termEx === List("8"), s"postings side re-shuffled:\n$p")
+      // the reverse case the Artifacts scaladoc names: a reader with MORE
+      // partitions than the store has buckets, joining against a side
+      // already hash-partitioned at its own count, re-shuffles the store
+      val pMore = atPartitions(16)(finalPlan(reloaded.postings.join(terms.distinct(), "term")))
+      assert("Exchange hashpartitioning\\(term#\\d+, 16\\)".r.findAllIn(pMore).length === 2, pMore)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
+  }
+
   test("tableName: distinct dirs that sanitize identically stay distinct") {
     // one namer for every bucketed store (BM25, corpus state, trade edges)
     assert(Artifacts.tableName("/tmp/a/b", "postings") !==

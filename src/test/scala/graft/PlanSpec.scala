@@ -512,13 +512,10 @@ class PlanSpec extends SparkSpec {
     val loaded = Curation.loadState(spark, dir)
     val delta = (301L to 400L).map(i => (i, s"delta doc $i body")).toDF("doc_id", "text")
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevP = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      // force the shuffle-join path and match the store's bucket count
-      // (production runs at 32; the suite session runs at 4, which would
-      // legitimately add a second delta-side exchange to reach 32)
+      // force the shuffle-join path; the store was saved in this session,
+      // so its bucket count is this session's shuffle partitions
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", graft.sources.Artifacts.Buckets.toString)
       // dedupDelta's shape: delta fingerprint window, then anti-join the
       // corpus fingerprint index — the state side must ride its buckets
       val q = graft.operators.Dedup.dedupDelta(delta, loaded.fingerprints, "text", "doc_id")
@@ -550,7 +547,6 @@ class PlanSpec extends SparkSpec {
         s"re-registered state table lost its bucketing:\n$pr")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.shuffle.partitions", prevP)
     }
   }
 }

@@ -124,10 +124,8 @@ class RetrievalSpec extends SparkSpec {
     // the postings read carries its bucket metadata: a term-keyed
     // aggregate runs without an exchange on the bucket key
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevP = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", "32") // match store buckets
       val agg = reloaded.postings.groupBy($"term").agg(sum($"tf").as("s"))
       agg.collect()
       val p = agg.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
@@ -149,7 +147,6 @@ class RetrievalSpec extends SparkSpec {
         s"re-registered dfreq lost its bucketing:\n$p2")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
-      spark.conf.set("spark.sql.shuffle.partitions", prevP)
     }
   }
 

@@ -56,7 +56,9 @@ MEM="${GRAFT_DUCKDB_MEM:-70GB}"
 # spill-aware shuffle sizing (the rule of the round-10 scale-exponent
 # runs, docs/SCALE.md): partitions ride the fixture — 32 at <=10x,
 # 32*copies/10 above, so per-task sort volume
-# stays roughly constant as the corpus grows
+# stays roughly constant as the corpus grows. Passed to the dump as
+# SPARK_GRAFT_SHUFFLE_PARTITIONS, it also sizes the bucket count of every
+# store the dump builds (BM25, corpus state, the trade-edge store)
 SHUF=$(( 32 * (COPIES > 10 ? COPIES / 10 : 1) ))
 FIXTURE="/tmp/graft_sweep_${COPIES}x"
 OUT="/tmp/graft_sweep_out_${TAG}"
