@@ -228,7 +228,10 @@ object Curation {
     marker.guard {
       val audit = marker.audit
       // storage mode: write the stage to parquet and return the SCAN of the
-      // files — the count reads parquet footers (metadata, not a data pass)
+      // files — the count reads parquet footers (metadata, not a data pass).
+      // A fresh write is read back with the schema it was written with; a
+      // resumed stage infers from its files, so one written by other code
+      // fails loudly downstream instead of being read as this schema
       def storeOnly(name: String, df: DataFrame): DataFrame = {
         val path = s"${storageDir.get}/$name.parquet"
         val spark = df.sparkSession
@@ -236,8 +239,11 @@ object Curation {
           val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
         }
-        if (!committed) df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path)
+        if (committed) spark.read.parquet(path)
+        else {
+          df.write.mode("overwrite").parquet(path)
+          spark.read.schema(df.schema).parquet(path)
+        }
       }
       def store(name: String, df: DataFrame): DataFrame = {
         val back = storeOnly(name, df)

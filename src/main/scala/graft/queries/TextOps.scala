@@ -636,7 +636,7 @@ object TextOps {
     val sparse = graft.operators.Retrieval.bm25TopKIndexed(
       graft.operators.Retrieval.loadBm25Index(s, s"$dir/bm25"),
       queries, k = k, idCol = "ck")
-    val cEmb = s.read.parquet(s"$dir/emb")
+    val cEmb = Tables.parquet(s, s"$dir/emb")
     val qRaw =
       if (encoded)
         graft.operators.Similarity.encodeText(queries, "query_id", "qtext",

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,7 +19,50 @@ object Tables {
 
   /** Load one driver fixture table, e.g. table(spark, sfDir, "lineitem"). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Read the parquet file or directory at `path`, inferring its schema
+    * once per file version — the reference's catalog keeps each table's
+    * schema instead of deriving it on every query, and [Artifacts.load]
+    * reads its parts the same way. A bare `spark.read.parquet` infers on
+    * every call, and inference runs a Spark job over the footers.
+    *
+    * The memo holds, per qualified path, the inferred schema and the
+    * signature it was inferred under: the leaf files' count, total length
+    * and latest modification time, plus every set SQL conf whose key
+    * contains `parquet` and `spark.sql.caseSensitive`. While the signature
+    * matches, the read is `spark.read.schema(memo).parquet(path)`. A
+    * rewrite (it changes a length or a modification time) or a change of a
+    * reader conf (e.g. `spark.sql.parquet.inferTimestampNTZ.enabled`)
+    * infers again and replaces the entry. Listings, relations and data are
+    * never cached: every call lists the files and returns a fresh relation
+    * with fresh expression ids.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val signed = try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(p, true)
+      val leaves = Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toVector
+      val conf = spark.sessionState.conf
+      val readerConf = conf.getAllConfs.filter(_._1.contains("parquet")) +
+        ("spark.sql.caseSensitive" -> conf.caseSensitiveAnalysis.toString)
+      Some(fs.makeQualified(p).toString -> SchemaSignature(leaves.size,
+        leaves.map(_.getLen).sum, leaves.map(_.getModificationTime).maxOption.getOrElse(0L),
+        readerConf))
+    } catch { case _: java.io.IOException => None } // Spark's read reports it
+    signed.flatMap { case (key, sig) => Option(schemas.get(key)).filter(_._1 == sig) } match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        signed.foreach { case (key, sig) => schemas.put(key, (sig, df.schema)) }
+        df
+    }
+  }
+  private final case class SchemaSignature(files: Int, bytes: Long, lastModified: Long,
+                                           readerConf: Map[String, String])
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaSignature, StructType)]()
 
   /** Register a temp directory for recursive deletion at JVM exit — the
     * cleanup half of the build-once/serve-many parquet memos (trade-edge

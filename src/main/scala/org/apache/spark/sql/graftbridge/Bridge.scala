@@ -67,11 +67,13 @@ object Bridge {
   /** Cross a materialization boundary on durable storage: write `df` to
     * parquet at `path` (overwriting) and return the scan of the files.
     * Lineage is bounded and, unlike cache or checkpoint blocks, the rows
-    * survive executor loss. Doubles round-trip parquet bit-exactly.
+    * survive executor loss. Doubles round-trip parquet bit-exactly. The
+    * scan takes the schema just written, so the read-back infers nothing
+    * (no footer job).
     */
   def durable(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   /** Cut a DataFrame's LOGICAL lineage without materializing anything:

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 import graft.sources.Tables
 import graft.pipeline.Schemas
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -118,5 +119,68 @@ class SourcesSpec extends SparkSpec {
       .select(unix_micros(col("ts")), col("ts_ns")).as[(Long, Long)].head()
     assert(a === ((usInstant, usInstant * 1000L)))
     assert(b === a, s"encodings disagree: long-nanos $a vs timestamp $b")
+  }
+
+  /** Spark jobs started while `body` runs. The listener bus delivers events
+    * asynchronously but in order, so a marker job run before and after
+    * `body` brackets exactly its jobs, whatever was still queued.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-before")
+      body
+      marker("jobs-after")
+      val seen = Iterator.continually(groups.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(g => g != null && g != "jobs-after").toVector
+      assert(seen.contains("jobs-before"), s"marker jobs never reached the listener: $seen")
+      seen.size - seen.indexOf("jobs-before") - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second Tables.table of an unchanged file starts no Spark job") {
+    Tables.table(spark, sf, "region").queryExecution.analyzed // infers once
+    val first = Tables.table(spark, sf, "region")
+    assert(jobsDuring(Tables.table(spark, sf, "region").queryExecution.analyzed) === 0)
+    val again = Tables.table(spark, sf, "region")
+    // a fresh relation per call: the memo holds a schema, not a plan
+    assert(first.schema === again.schema)
+    assert(first.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(again.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+    assert(again.collect().toSet === first.collect().toSet)
+  }
+
+  test("Tables.table follows a rewrite of the file at the same path") {
+    val dir = Files.createTempDirectory("graft_rewrite").toString
+    spark.range(3).selectExpr("id AS a").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").as[Long].collect().sorted.toSeq === Seq(0L, 1L, 2L))
+    spark.range(2).selectExpr("CAST(id AS STRING) AS b", "id * 10 AS c")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables.table(spark, dir, "t")
+    assert(back.columns.toSeq === Seq("b", "c"))
+    assert(back.as[(String, Long)].collect().sorted.toSeq === Seq(("0", 0L), ("1", 10L)))
+  }
+
+  test("Tables.table follows the session's parquet reader conf (inferTimestampNTZ)") {
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    try {
+      for (ntz <- Seq(true, false, true)) {
+        spark.conf.set(key, ntz.toString)
+        assert(Tables.table(spark, sf, "events").schema("ts").dataType ===
+          (if (ntz) TimestampNTZType else TimestampType), s"$key=$ntz")
+      }
+    } finally spark.conf.unset(key)
   }
 }
