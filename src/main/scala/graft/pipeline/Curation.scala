@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.ListMap
 import scala.collection.mutable
 import graft.functions.{Expressions, TextFns}
-import graft.operators.{Dedup, Pack, Split}
+import graft.operators.{Blocklist, Dedup, Pack, Repetition, Split}
 import graft.sources.Artifacts
 
 /** The operators composed into the pipeline they exist for: raw crawl →
@@ -30,7 +31,7 @@ import graft.sources.Artifacts
   */
 object Curation {
 
-  /** Storage level for the persist-mode stage caches. The columnar SQL
+  /** Storage level for the [Cached]-mode stage caches. The columnar SQL
     * cache holds corpus-sized byte-array batches on the heap; under memory
     * pressure those blocks are exactly what the collector scans and what
     * amplified the composed entries 2-3× in contended environments
@@ -124,34 +125,28 @@ object Curation {
   case class Stages(input: DataFrame, quality: DataFrame, spanGated: DataFrame,
                     exact: DataFrame, deduped: DataFrame, clean: DataFrame,
                     split: DataFrame, packed: DataFrame,
-                    /** Audit counts captured BY the persist-mode
-                      * materialization itself (`mark`'s count, the per-split
-                      * histogram, the packed-stats single agg) — a stage-count
-                      * observer reads these instead of re-running an action
-                      * per stage, halving the actions of a counted run. Keys:
-                      * input quality spans exact neardup clean split_<name>
-                      * pieces sequences; packed_tokens is ABSENT when the
-                      * packed frame is empty (sum-of-nothing is SQL NULL, and
-                      * the observer must reproduce that). Empty map when
-                      * persist = false (nothing was materialized to count).
+                    /** Audit counts captured BY the materializing
+                      * boundaries themselves (the stage count, the
+                      * per-split histogram, the packed-stats single agg)
+                      * — a stage-count observer reads these instead of
+                      * re-running an action per stage, halving the actions
+                      * of a counted run. Keys: input quality spans exact
+                      * neardup clean split_<name> pieces sequences;
+                      * packed_tokens is ABSENT when the packed frame is
+                      * empty (sum-of-nothing is SQL NULL, and the observer
+                      * must reproduce that). Empty in [Lazy] mode (nothing
+                      * was materialized to count).
                       */
-                    counts: Map[String, Long] = Map.empty,
-                    /** Wall seconds between consecutive materialization
-                      * boundaries of a persist/storage-mode run, keyed like
-                      * `counts` — stage N's value covers everything since
-                      * stage N−1 materialized, so eager construction work
-                      * (the component loop's checkpoint rounds) is
-                      * attributed to the stage that triggered it. Bench
-                      * cost attribution only (see [lastStageSecs]) — never
-                      * part of an oracle frame. Empty on lazy runs.
-                      */
-                    stageSecs: Map[String, Double] = Map.empty)
+                    counts: Map[String, Long] = Map.empty)
 
-  /** The most recent persist/storage-mode [stages] run's per-stage wall
-    * seconds ON THIS THREAD — a diagnostic side-channel for Bench (qc01 is
-    * ~18% of the catalog total; its next optimization needs per-stage
-    * attribution, not a guess). Bench measures an entry and snapshots this
-    * on the same thread, so the value it records is that entry's last
+  /** The most recent [Cached]/[Stored] [stages] run's per-stage wall
+    * seconds ON THIS THREAD, keyed like `Stages.counts` — a diagnostic
+    * side-channel for Bench (qc01 is ~18% of the catalog total; its next
+    * optimization needs per-stage attribution, not a guess). Stage N's
+    * value covers everything since stage N−1 materialized, so eager
+    * construction work (the component loop's checkpoint rounds) lands on
+    * the stage that triggered it. Bench measures an entry and snapshots
+    * this on the same thread, so the value it records is that entry's last
     * timed run; thread-locality means concurrent curate() calls (parallel
     * tests) can never interleave their attribution into Bench's snapshot.
     * Never read on a correctness path.
@@ -166,126 +161,151 @@ object Curation {
     Curated(st.split, st.packed)
   }
 
-  /** `persist = true` caches each stage frame as it is built — the
-    * "persist at every arrow" mode the object doc describes for
-    * production runs (and for anything that observes more than one stage,
-    * like qc01's count union: without it every observer re-executes the
-    * shared upstream chain, and the near-dup stage's component loop —
-    * which runs eagerly during construction — would pay the quality/exact
-    * chain a second time). `false` (default) keeps the composition fully
-    * lazy so small single-output runs execute as one job and leak no
-    * cache entries.
+  /** Where a [stages] or [curateDelta] run keeps each stage frame between
+    * arrows — the one boundary policy both chains hand to [StageMarker].
+    *
+    *   - [Lazy] (default) keeps the composition fully lazy, so a small
+    *     single-output run executes as one job and leaks no cache entry.
+    *   - [Cached] caches each stage frame as it is built — "persist at
+    *     every arrow", for production runs and for anything that observes
+    *     more than one stage, like qc01's counts: lazily, every observer
+    *     re-executes the shared upstream chain, and the near-dup stage's
+    *     component loop, which runs eagerly during construction, would pay
+    *     the quality/exact chain a second time. Each stage materializes
+    *     EAGERLY through its observer action: a lazily persisted stage is
+    *     cold when the first multi-branch action runs, and concurrent
+    *     branches race-recompute the shared upstream chain (adding the
+    *     span-gate stage took the 12-branch qc01 entry from 26 s to 93 s at
+    *     sf0.1 under lazy persist). `release = true` unpersists each
+    *     stage's cache as soon as the next stage's materialization has
+    *     consumed it: the peak cached footprint drops from ~9 corpus-sized
+    *     caches to the 2-3 frames still live, as a 100 TB run must, and
+    *     GC/eviction churn under a tight heap shrinks with it (the
+    *     mechanism that amplified the composed entries 2-3× under memory
+    *     pressure, docs/SCALE.md round-9 note). Lineage stays intact, so a
+    *     re-read released frame recomputes (correct, just uncached);
+    *     `Stages.counts` is captured before any release.
+    *   - [Stored] swaps the caches for STORAGE round-trips: each stage frame
+    *     is written to `<dir>/<stage>.parquet` and downstream stages read
+    *     the files — the medallion (bronze→silver) discipline a 100 TB run
+    *     uses between arrows, where nine corpus-sized frames cannot sit in
+    *     cluster memory and a boundary doubles as the restart point. Counts
+    *     and frames equal [Cached]'s (qc01 and qc01s share one oracle).
+    *     `resume = true` READS a stage already COMMITTED under `dir`
+    *     (directory + `_SUCCESS` marker; a crash mid-write leaves none and
+    *     the stage rewrites) instead of recomputing it, and everything
+    *     downstream rebuilds from the surviving stages — any subset, since
+    *     every stored stage's downstream plan reads the parquet scan, never
+    *     the upstream lineage. The caller owns the resume invariant: same
+    *     input, config and code version as the interrupted run (the
+    *     medallion restart contract; CurationSpec pins bit-identical output
+    *     and untouched surviving-stage files).
+    *
+    * [curateDelta] takes the [InMemory] modes only.
     */
-  /** `release = true` (persist mode only) unpersists each stage's cache as
-    * soon as the next stage's materialization has consumed it — the
-    * pipeline's peak cached footprint drops from every-stage-resident
-    * (~9 corpus-sized caches) to the 2-3 frames still live (split, packed,
-    * and the in-flight stage). A 100 TB run cannot hold nine corpus copies
-    * in cluster memory either; checkpoint-and-release is the production
-    * discipline. Lineage stays intact, so a caller who re-reads a released
-    * Stages frame recomputes it (correct, just uncached) — the stage
-    * counts observer reads `Stages.counts`, which is captured before any
-    * release. Released mode also shrinks GC/eviction churn under a tight
-    * heap — the mechanism that amplified the composed entries 2-3× under
-    * memory pressure (see docs/SCALE.md round-9 note).
+  sealed trait StageMode
+  sealed trait InMemory extends StageMode
+  case object Lazy extends InMemory
+  final case class Cached(release: Boolean) extends InMemory
+  final case class Stored(dir: String, resume: Boolean = false) extends StageMode
+
+  /** Canonical text: one byte representation (NFC) with PII gone — what
+    * every hash, shingle and gate of the pipeline must see, on the corpus
+    * and the benchmark side alike (and at the door, [[graft.streaming.Streams]]).
     */
-  /** `storageDir = Some(dir)` (with persist = true) swaps the cache-based
-    * per-arrow materialization for STORAGE round-trips: each stage frame
-    * writes to parquet under `dir` and downstream stages re-read the
-    * files — the medallion (bronze→silver) discipline a 100 TB run
-    * actually uses between pipeline arrows, where nine corpus-sized
-    * frames cannot sit in cluster memory and a stage boundary doubles as
-    * the restart point. Stage counts ride the same observer contract
-    * (parquet footer counts — metadata reads, not scans), so the output
-    * frame is bit-identical to the cache mode's and the two share one
-    * oracle (qc01 vs qc01s prices exactly this choice).
+  private[graft] def canonicalText(text: Column): Column =
+    TextFns.scrubPii(Expressions.normalizeText(text, "NFC"))
+
+  /** Row-local quality gates (narrow, no shuffle), the optional blocklist
+    * ratio gate (Blocklist.keepPredicate — map-only for the Config-sized
+    * term list), then the doc-keyed repetition signals: cheap filters
+    * that shrink every pairwise stage after.
     */
-  /** `resume = true` (storage mode only) turns each stage boundary into
-    * the restart point the mode's doc promises: a stage whose parquet is
-    * already COMMITTED under `storageDir` (directory + `_SUCCESS` marker —
-    * a crash mid-write leaves no marker and the stage rewrites) is READ
-    * instead of recomputed, and everything downstream rebuilds from the
-    * surviving prefix. Works for any surviving subset, not just prefixes:
-    * every stored stage's downstream plan reads the parquet scan, never
-    * the upstream lineage. The caller owns the resume invariant — same
-    * input, same config, same code version as the interrupted run (the
-    * medallion restart contract; CurationSpec pins bit-identical output
-    * and untouched surviving-stage files).
+  private def qualityGated(canon: DataFrame, idCol: String, textCol: String,
+                           cfg: Config): DataFrame = {
+    val gated0 = canon
+      .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
+        TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
+    val gated = if (cfg.blockTerms.isEmpty) gated0
+      else gated0.filter(Blocklist.keepPredicate(
+        col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
+    val rep = Repetition.repetitionSignals(gated, idCol, textCol)
+      .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
+        col("top_bigram_frac") <= cfg.maxTopBigramFrac)
+      .select(col(idCol))
+    gated.join(rep, Seq(idCol), "left_semi")
+  }
+
+  /** The optional verify stage: confirm near-dup candidate pairs by edit
+    * distance (normalized by the longer text) before they merge clusters.
+    * `texts` holds the text of every id a pair can name.
     */
+  private def editVerified(rawPairs: DataFrame, texts: => DataFrame, idCol: String,
+                           textCol: String, cfg: Config): DataFrame =
+    cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
+      val ta = texts.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
+      val tb = texts.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
+      // BOUNDED Levenshtein: the DP early-exits (and returns -1) once the
+      // distance exceeds ⌈maxRatio·max(|a|,|b|)⌉ — O(bound·min) per pair
+      // instead of O(|a|·|b|), which matters when candidates are long
+      // documents. -1 (exceeded) fails the ≤ comparison like any
+      // over-bound distance; the exact unrounded ratio check stays.
+      val bound = ceil(lit(maxRatio) *
+        greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
+      val dist = Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.Levenshtein(
+          Bridge.expression(col("__ta")),
+          Bridge.expression(col("__tb")),
+          Some(Bridge.expression(bound))))
+      rawPairs.join(ta, "id_a").join(tb, "id_b")
+        .filter(dist >= 0 && dist.cast("double") <=
+          lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+    }
+
+  /** Decontaminate against the benchmark (containment, not Jaccard). The
+    * benchmark goes through the SAME canonicalization as the corpus —
+    * shingles must compare canonical bytes to canonical bytes, or a
+    * decomposed-Unicode benchmark item (or one containing PII the corpus
+    * copy had rewritten to <EMAIL>/<IP>/<PHONE>) could never match its
+    * contaminated twin and would silently ship in the training set.
+    */
+  private def decontaminated(deduped: DataFrame, benchmark: DataFrame, idCol: String,
+                             textCol: String, cfg: Config): DataFrame = {
+    val benchCanon = benchmark.select(col(idCol), canonicalText(col(textCol)).as(textCol))
+    val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
+      n = cfg.ngramN, threshold = cfg.contaminationMax)
+      .select(col("doc_id").as(idCol)).distinct()
+    deduped.join(contaminated, Seq(idCol), "left_anti")
+  }
+
+  /** The last two stages: deterministic per-row split, then the configured
+    * train split packed into sequences — continuing each shard's stream
+    * from `shardOffsets` when an incremental run passes the corpus's.
+    */
+  private def splitPacked(marker: StageMarker, clean: DataFrame, idCol: String,
+                          textCol: String, cfg: Config,
+                          shardOffsets: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val split = marker("split", Split.assignSplit(clean, col(idCol), cfg.splits))(
+      marker.splitCounts)
+    marker.drop(clean)
+    val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
+      .select(col(idCol), TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+    val packed = marker("packed", Pack.packSequences(trainTokens, idCol, "n_tokens",
+      cfg.seqBudget, cfg.packShards, shardOffsets))(marker.packedStats)
+    (split, packed)
+  }
+
   def stages(docs: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
-             cfg: Config = Config(), persist: Boolean = false,
-             release: Boolean = false,
-             storageDir: Option[String] = None,
-             resume: Boolean = false): Stages = {
-    // persist mode materializes each stage EAGERLY (count after persist):
-    // a lazily-persisted stage is cold when the first multi-branch action
-    // runs, and concurrent branches race-recompute the shared upstream
-    // chain instead of reading cache — adding the span-gate stage (one
-    // more multi-reference layer) took the 12-branch qc01 entry from
-    // 26 s to 93 s at sf0.1 under lazy persist; eager per-arrow
-    // materialization runs every chain exactly once.
-    val marker = new StageMarker(persist && storageDir.isEmpty, release, stageStorageLevel)
+             cfg: Config = Config(), mode: StageMode = Lazy): Stages = {
+    val marker = new StageMarker(mode, stageStorageLevel)
     marker.guard {
-      val audit = marker.audit
-      // storage mode: write the stage to parquet and return the SCAN of the
-      // files — the count reads parquet footers (metadata, not a data pass).
-      // A fresh write is read back with the schema it was written with; a
-      // resumed stage infers from its files, so one written by other code
-      // fails loudly downstream instead of being read as this schema
-      def storeOnly(name: String, df: DataFrame): DataFrame = {
-        val path = s"${storageDir.get}/$name.parquet"
-        val spark = df.sparkSession
-        val committed = resume && {
-          val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-        }
-        if (committed) spark.read.parquet(path)
-        else {
-          df.write.mode("overwrite").parquet(path)
-          spark.read.schema(df.schema).parquet(path)
-        }
-      }
-      def store(name: String, df: DataFrame): DataFrame = {
-        val back = storeOnly(name, df)
-        audit(name) = back.count()
-        back
-      }
-      // Per-stage wall attribution (Stages.stageSecs): boundary-to-boundary
-      // deltas, so eager work between two marks (the component loop's
-      // checkpoint rounds run during construction, not inside any count)
-      // lands on the stage whose materialization follows it.
-      val stageWall = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-      var lastBoundary = System.nanoTime()
-      def stamp(name: String): Unit = {
-        val now = System.nanoTime()
-        stageWall(name) = (now - lastBoundary) / 1e9
-        lastBoundary = now
-      }
-      // Persist mode cuts the logical plan at each boundary (the marker's
-      // cache cuts): uncut, r16 measured the cache-mode entry at 26.8 s
-      // against the storage-mode twin's 9.7 s for the SAME pipeline, the gap
-      // concentrated in the deepest stages (split 4.3 s, packed 7.5 s of
-      // near-zero real compute) — a parquet re-read is a flat scan already.
-      def mark(name: String, df: DataFrame): DataFrame = {
-        val out = if (storageDir.isDefined) store(name, df) else marker.counted(name, df)
-        if (storageDir.isDefined || persist) stamp(name)
-        out
-      }
-      // see curateDelta's lineageCut: eager one-shot materialization (under
-      // AQE) for the pair frame connectedComponents' edge union reads twice.
-      // Storage mode cuts through parquet instead — at cluster scale the
-      // pair frame on durable storage is also the dedup-stage restart point.
-      def lineageCut(df: DataFrame): DataFrame =
-        if (storageDir.isDefined) storeOnly("pairs", df) // a checkpoint, not a
-        // counted stage: no audit row, so both modes emit identical counts
-        else if (persist) df.localCheckpoint(true, stageStorageLevel) else df
       val id = col(idCol)
 
-      // 1. canonicalize: one byte representation (NFC) with PII gone, BEFORE
-      // any hash sees the text. Persisted in persist mode: the quality stage
-      // reads it twice (gate filter + repetition signals), and NFC+PII regex
-      // scrubbing is the most expensive row-local pass in the pipeline —
-      // without the cache it runs once per consumer.
+      // 1. canonicalize BEFORE any hash sees the text. A stage boundary:
+      // the quality stage reads it twice (gate filter + repetition
+      // signals), and NFC+PII regex scrubbing is the most expensive
+      // row-local pass in the pipeline — uncut, it runs once per consumer.
       // Parallelism note (measured, round 9): the fixture's documents.parquet
       // is ONE row group, so this scan — and every row-local pass over it —
       // runs on one core (the canon+quality block is ~7.6 s of qc01's 32 s).
@@ -297,14 +317,13 @@ object Curation {
       // splits and no repartition is needed; forcing one at demo scale is a
       // fixture-tuned pessimization, so the input partitioning is left to
       // the source.
-      // barrier-fenced (see Expressions.Barrier): in persist mode the stage
-      // cache is the materialization point, but a persist=false caller's
-      // gate filters would otherwise be pushed below this projection with
-      // the scrub∘NFC subtree substituted per reference (measured 14.7 vs
+      // barrier-fenced (see Expressions.Barrier): in Cached mode the stage
+      // cache is the materialization point, but a Lazy caller's gate
+      // filters would otherwise be pushed below this projection with the
+      // scrub∘NFC subtree substituted per reference (measured 14.7 vs
       // 1.9 s/M on the streaming twin of this exact shape)
       val scrubbed = docs.select(id,
-        Expressions.barrier(
-          TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
+        Expressions.barrier(canonicalText(col(textCol))).as(textCol))
       // 1b. optional line-level boilerplate strip (CCNet paragraph dedup) —
       // BEFORE any hash: chrome differences must not defeat exact dedup.
       // Rewrites text, drops no rows, so the audit frame keeps its shape.
@@ -312,23 +331,10 @@ object Curation {
         Dedup.dedupLines(scrubbed, idCol, textCol, k)
           .select(id, col("text").as(textCol))
       }
-      val canon = mark("input", lineClean)
+      val canon = marker.counted("input", lineClean)
 
-      // 2. row-local quality gates (narrow, no shuffle), then the doc-keyed
-      // repetition signals — cheap filters shrink every pairwise stage after
-      val gated0 = canon
-        .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
-          TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
-      // 2a'. optional blocklist ratio gate (Blocklist.keepPredicate —
-      // map-only for the Config-sized term list)
-      val gated = if (cfg.blockTerms.isEmpty) gated0
-        else gated0.filter(graft.operators.Blocklist.keepPredicate(
-          col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
-      val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
-        .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
-          col("top_bigram_frac") <= cfg.maxTopBigramFrac)
-        .select(id)
-      val quality = mark("quality", gated.join(rep, Seq(idCol), "left_semi"))
+      // 2. quality gates
+      val quality = marker.counted("quality", qualityGated(canon, idCol, textCol, cfg))
       marker.drop(canon) // quality (gate + repetition) was canon's only consumer —
       // and canon is the pipeline's LARGEST cache (full corpus text)
 
@@ -336,23 +342,20 @@ object Curation {
       // duplicated across >= dupSpanMinDocs documents (substring-granular —
       // the signal the document-level stages below can't see). One window-
       // hash map pass + two combinable aggregates + one 8-byte-hash join
-      // over the quality survivors; a no-op frame when disabled.
-      val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
-        val keep = Dedup.dupSpanStats(quality, idCol, textCol,
-            cfg.dupSpanWidth, cfg.dupSpanMinDocs)
-          .filter(col("dup_frac") <= maxFrac).select(id)
-        mark("spans", quality.join(keep, Seq(idCol), "left_semi"))
+      // over the quality survivors.
+      val spanGated = cfg.maxDupSpanFrac.fold(marker.same("spans", "quality", quality)) {
+        maxFrac =>
+          val keep = Dedup.dupSpanStats(quality, idCol, textCol,
+              cfg.dupSpanWidth, cfg.dupSpanMinDocs)
+            .filter(col("dup_frac") <= maxFrac).select(id)
+          marker.counted("spans", quality.join(keep, Seq(idCol), "left_semi"))
       }
-      // gate off → the spans frame IS the quality frame; the audit row still
-      // exists so a silently (de)activated gate flips the observer's hash
-      if ((persist || storageDir.isDefined) && !audit.contains("spans"))
-        audit("spans") = audit("quality")
       if (spanGated ne quality) marker.drop(quality) // gate on: quality fed only the gate
 
       // 3. exact dedup (fingerprint aggregate), keep the min-id copy
       val exactKeep = Dedup.exactByFingerprint(spanGated, textCol, idCol)
         .select(col("keep_id").as(idCol))
-      val exact = mark("exact", spanGated.join(exactKeep, Seq(idCol), "left_semi"))
+      val exact = marker.counted("exact", spanGated.join(exactKeep, Seq(idCol), "left_semi"))
       marker.drop(spanGated)
 
       // 4. near-dup clusters over the survivors, keep canonical members.
@@ -363,101 +366,115 @@ object Curation {
       // the regime a real corpus (and this fixture's ~31-word vocabulary)
       // lives in — see docs/SCALE.md "Round-6 delta: prefix filtering's
       // crossover".
-      // Optional verify stage: confirm Jaccard candidates by edit distance
-      // (normalized by the longer text) before they merge clusters
       val rawPairs = Dedup.ngramJaccardPairsPrefix(exact, idCol, textCol,
         n = cfg.ngramN, threshold = cfg.nearDupJaccard)
-      val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
-        val ta = exact.select(id.as("id_a"), col(textCol).as("__ta"))
-        val tb = exact.select(id.as("id_b"), col(textCol).as("__tb"))
-        // BOUNDED Levenshtein: the DP early-exits (and returns -1) once the
-        // distance exceeds ⌈maxRatio·max(|a|,|b|)⌉ — O(bound·min) per pair
-        // instead of O(|a|·|b|), which matters when candidates are long
-        // documents. -1 (exceeded) fails the ≤ comparison like any
-        // over-bound distance; the exact unrounded ratio check stays.
-        val bound = ceil(lit(maxRatio) *
-          greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
-        val dist = Bridge.column(
-          org.apache.spark.sql.catalyst.expressions.Levenshtein(
-            Bridge.expression(col("__ta")),
-            Bridge.expression(col("__tb")),
-            Some(Bridge.expression(bound))))
-        rawPairs.join(ta, "id_a").join(tb, "id_b")
-          .filter(dist >= 0 && dist.cast("double") <=
-            lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-      })
+      val pairs = marker.lineageCut(editVerified(rawPairs, exact, idCol, textCol, cfg))
       val canonical = Dedup.nearDupClusters(exact, idCol, pairs)
         .filter(col("is_canonical")).select(id)
-      val deduped = mark("neardup", exact.join(canonical, Seq(idCol), "left_semi"))
+      val deduped = marker.counted("neardup", exact.join(canonical, Seq(idCol), "left_semi"))
       marker.drop(exact) // pairs are checkpointed, clusters collected — exact is done
 
-      // 5. decontaminate against the benchmark (containment, not Jaccard).
-      // The benchmark goes through the SAME canonicalization as stage 1 —
-      // shingles must compare canonical bytes to canonical bytes, or a
-      // decomposed-Unicode benchmark item (or one containing PII the corpus
-      // copy had rewritten to <EMAIL>/<IP>/<PHONE>) could never match its
-      // contaminated twin and would silently ship in the training set
-      val benchCanon = benchmark.select(col(idCol),
-        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
-      val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
-        n = cfg.ngramN, threshold = cfg.contaminationMax)
-        .select(col("doc_id").as(idCol)).distinct()
-      val clean = mark("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
+      // 5. decontaminate, 6. split, 7. pack
+      val clean = marker.counted("clean",
+        decontaminated(deduped, benchmark, idCol, textCol, cfg))
       marker.drop(deduped)
-
-      // 6. deterministic split, 7. pack the configured train split
-      val split0 = Split.assignSplit(clean, id, cfg.splits)
-      val split =
-        if (storageDir.isDefined) {
-          val back = store("split", split0)
-          audit.remove("split") // observer contract wants per-split rows
-          marker.splitCounts(back)
-          back
-        } else marker(split0)(marker.splitCounts)
-      if (storageDir.isDefined || persist) stamp("split")
-      marker.drop(clean)
-      val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
-        .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      val packed0 = Pack.packSequences(trainTokens, idCol, "n_tokens",
-        cfg.seqBudget, cfg.packShards)
-      val packed =
-        if (storageDir.isDefined) {
-          val back = store("packed", packed0)
-          audit.remove("packed")
-          marker.packedStats(back)
-          back
-        } else marker(packed0)(marker.packedStats)
-      if (storageDir.isDefined || persist) stamp("packed")
-      // ListMap: keep pipeline order so the bench JSON reads as the stage
-      // sequence (a plain toMap re-hashes the keys)
-      val stageSecsOrdered =
-        scala.collection.immutable.ListMap(stageWall.toSeq: _*)
-      lastStageSecs.set(stageSecsOrdered)
+      val (split, packed) = splitPacked(marker, clean, idCol, textCol, cfg, None)
+      lastStageSecs.set(marker.stageSecs)
       Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
-        counts = audit.toMap, stageSecs = stageSecsOrdered)
+        counts = marker.audit.toMap)
     }
   }
 
-  /** The persist-mode stage boundaries [stages] and [curateDelta] share.
-    * Each boundary is one cache cut (Bridge.materialize) whose action is
-    * the stage's observer read, recorded in `audit` (Stages.counts) so
-    * observers never pay a second action per stage. Outside persist mode
-    * frames pass through untouched and nothing is recorded.
+  /** The stage boundaries [stages] and [curateDelta] share, under one
+    * [StageMode]. A [Cached] boundary is one cache cut (Bridge.materialize),
+    * a [Stored] one a parquet write and read-back; either way the boundary
+    * runs the stage's observer action once on the materialized frame and
+    * records it in `audit` (Stages.counts), so observers never pay a
+    * second action per stage. [Lazy] frames pass through untouched and
+    * nothing is recorded.
     */
-  private final class StageMarker(persist: Boolean, release: Boolean, level: StorageLevel) {
+  private final class StageMarker(mode: StageMode, level: StorageLevel) {
     val audit = mutable.LinkedHashMap.empty[String, Long]
+    /** Boundary-to-boundary wall seconds ([lastStageSecs]). */
+    var stageSecs = ListMap.empty[String, Double]
+    private var lastBoundary = System.nanoTime()
     private val held = mutable.Map.empty[DataFrame, Bridge.Cut]
 
-    def apply(df: DataFrame)(action: DataFrame => Unit): DataFrame =
-      if (!persist) df else {
-        val c = Bridge.materialize(df, level)(action)
-        held(c.view) = c
-        c.view
+    /** Stage `name`'s boundary, running `action` on the materialized frame.
+      * The cache cut matters beyond reuse: uncut, r16 measured the cached
+      * entry at 26.8 s against the stored twin's 9.7 s for the SAME
+      * pipeline, the gap concentrated in the deepest stages (split 4.3 s,
+      * packed 7.5 s of near-zero real compute) — a parquet re-read is a
+      * flat scan already.
+      */
+    def apply(name: String, df: DataFrame)(action: DataFrame => Unit): DataFrame =
+      mode match {
+        case Lazy => df
+        case Cached(_) => stamped(name) {
+          val c = Bridge.materialize(df, level)(action)
+          held(c.view) = c
+          c.view
+        }
+        case Stored(dir, resume) => stamped(name) {
+          val back = stored(dir, resume, name, df)
+          action(back)
+          back
+        }
       }
 
+    private def stamped(name: String)(out: DataFrame): DataFrame = {
+      val now = System.nanoTime()
+      stageSecs = stageSecs.updated(name, (now - lastBoundary) / 1e9)
+      lastBoundary = now
+      out
+    }
+
     /** A stage boundary whose action is the stage's row count. */
-    def counted(name: String, df: DataFrame): DataFrame = apply(df)(p => audit(name) = p.count())
+    def counted(name: String, df: DataFrame): DataFrame = apply(name, df)(p => audit(name) = p.count())
+
+    /** A stage the configuration switched off: `df` passes on as the stage
+      * frame and its audit row repeats `as`'s, so a gate that silently
+      * (de)activates still flips the observer's hash.
+      */
+    def same(name: String, as: String, df: DataFrame): DataFrame = {
+      if (mode != Lazy) audit(name) = audit(as)
+      df
+    }
+
+    /** The near-dup pair frame's cut — a checkpoint, not a counted stage
+      * (no audit row, so every mode emits identical counts). It fans out
+      * several ways (connected components' edge union reads it twice, the
+      * delta chain's corpus links twice more) and its first consumer is
+      * the component loop's eager edge checkpoint, so an uncut chain
+      * re-runs pair generation + the edit-distance verify per reference
+      * (qc02 benched 42.2 s). localCheckpoint rather than persist: the
+      * checkpoint job runs the chain once UNDER AQE and downstream
+      * consumers read stored blocks, whereas .persist() compiles the
+      * cached subtree without AQE's runtime re-planning — measured 57.1 s,
+      * WORSE than no caching at all. [Stored] cuts through `pairs.parquet`
+      * instead: at cluster scale the pair frame on durable storage is also
+      * the dedup-stage restart point.
+      */
+    def lineageCut(df: DataFrame): DataFrame = mode match {
+      case Lazy => df
+      case Cached(_) => df.localCheckpoint(true, level)
+      case Stored(dir, resume) => stored(dir, resume, "pairs", df)
+    }
+
+    /** `<dir>/<name>.parquet` as the stage frame: a committed one (resume
+      * mode) is read and infers its schema from its files, so a stage
+      * written by other code fails loudly downstream instead of being read
+      * as this schema; otherwise `df` is written and read back.
+      */
+    private def stored(dir: String, resume: Boolean, name: String, df: DataFrame): DataFrame = {
+      val path = s"$dir/$name.parquet"
+      val spark = df.sparkSession
+      val committed = resume && {
+        val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+      }
+      if (committed) spark.read.parquet(path) else Bridge.durable(df, path)
+    }
 
     /** The split frame's action: the per-split histogram (one job) rather
       * than a bare count — the observer's `05_split_*` rows ride it.
@@ -481,9 +498,11 @@ object Curation {
     }
 
     /** Release a stage's cache once the downstream materialization has
-      * consumed it (release mode only; a no-op on frames it never cut).
+      * consumed it (`Cached(release = true)` only; a no-op on frames it
+      * never cut).
       */
-    def drop(df: DataFrame): Unit = if (release) held.remove(df).foreach(_.release())
+    def drop(df: DataFrame): Unit =
+      if (mode == Cached(release = true)) held.remove(df).foreach(_.release())
 
     /** Build the stages; if construction throws, release every stage
       * still held, so a failed run leaves no cache entry behind.
@@ -636,33 +655,17 @@ object Curation {
     */
   def curateDelta(state: CorpusState, delta: DataFrame, benchmark: DataFrame,
                   idCol: String, textCol: String,
-                  cfg: Config = Config(), persist: Boolean = false,
-                  release: Boolean = false): Stages = {
-    // eager per-arrow materialization in persist mode, count captured;
-    // release drops each stage's cache once consumed — see stages()
-    val marker = new StageMarker(persist, release, deltaStorageLevel)
+                  cfg: Config = Config(), mode: InMemory = Lazy): Stages = {
+    val marker = new StageMarker(mode, deltaStorageLevel)
     marker.guard {
-      // Eager one-shot materialization for the verified pair frame: it fans
-      // out FIVE ways (the connected-components edge union reads it twice,
-      // corpusLinked twice, deltaPairs once) and its first consumer is CC's
-      // eager edge checkpoint, so an unpersisted chain re-runs posting-join
-      // pair generation + the edit-distance verify per reference (qc02
-      // benched 42.2 s). localCheckpoint rather than persist: the checkpoint
-      // job runs the chain once UNDER AQE and downstream consumers read
-      // stored blocks, whereas .persist() compiles the cached subtree
-      // without AQE's runtime re-planning — measured 57.1 s, WORSE than no
-      // caching at all (and the round's earlier 3-consumer persist attempt
-      // measured the same effect, 44.8 vs 37.7 s).
-      def lineageCut(df: DataFrame): DataFrame =
-        if (persist) df.localCheckpoint(true, deltaStorageLevel) else df
       val id = col(idCol)
 
       // 1-2. canonicalize + row-local gates: identical to the batch stages
-      // (canon persisted for the same double-read reason; input partitioning
-      // left to the source for the same task-overhead reason — see stages())
+      // (canon cut for the same double-read reason, fenced the same way;
+      // input partitioning left to the source for the same task-overhead
+      // reason — see stages())
       val scrubbedDelta = delta.select(id,
-        Expressions.barrier( // same fence as stages() — see the note there
-          TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))).as(textCol))
+        Expressions.barrier(canonicalText(col(textCol))).as(textCol))
       // 1b. optional line strip, incremental analog: line doc-frequencies
       // count over corpus ∪ delta (chrome shared with shipped docs must
       // count), only delta docs are rewritten. Honest caveat: the corpus
@@ -679,18 +682,7 @@ object Curation {
           .select(id, col("text").as(textCol))
       }
       val canon = marker.counted("input", lineClean)
-      val gated0 = canon
-        .filter(TextFns.tokenCount(col(textCol)) >= cfg.minTokens &&
-          TextFns.qualityScore(col(textCol)) >= cfg.minQuality)
-      // 2a'. optional blocklist ratio gate — identical to the batch stage
-      val gated = if (cfg.blockTerms.isEmpty) gated0
-        else gated0.filter(graft.operators.Blocklist.keepPredicate(
-          col(textCol), cfg.blockTerms, cfg.blockMaxRatio))
-      val rep = graft.operators.Repetition.repetitionSignals(gated, idCol, textCol)
-        .filter(col("dup_line_frac") <= cfg.maxDupLineFrac &&
-          col("top_bigram_frac") <= cfg.maxTopBigramFrac)
-        .select(id)
-      val quality = marker.counted("quality", gated.join(rep, Seq(idCol), "left_semi"))
+      val quality = marker.counted("quality", qualityGated(canon, idCol, textCol, cfg))
       marker.drop(canon)
 
       // 2b. optional boilerplate gate, the incremental analog: a delta doc's
@@ -701,16 +693,15 @@ object Curation {
       // production run would persist the corpus window-hash table as state
       // instead of recomputing it (same class of trade as the near-dup
       // index, see stateOf).
-      val spanGated = cfg.maxDupSpanFrac.fold(quality) { maxFrac =>
-        val all = state.docs.select(id, col(textCol))
-          .unionByName(quality.select(id, col(textCol)))
-        val keep = Dedup.dupSpanStats(all, idCol, textCol,
-            cfg.dupSpanWidth, cfg.dupSpanMinDocs)
-          .filter(col("dup_frac") <= maxFrac).select(id)
-        marker.counted("spans", quality.join(keep, Seq(idCol), "left_semi"))
+      val spanGated = cfg.maxDupSpanFrac.fold(marker.same("spans", "quality", quality)) {
+        maxFrac =>
+          val all = state.docs.select(id, col(textCol))
+            .unionByName(quality.select(id, col(textCol)))
+          val keep = Dedup.dupSpanStats(all, idCol, textCol,
+              cfg.dupSpanWidth, cfg.dupSpanMinDocs)
+            .filter(col("dup_frac") <= maxFrac).select(id)
+          marker.counted("spans", quality.join(keep, Seq(idCol), "left_semi"))
       }
-      if (persist && !marker.audit.contains("spans"))
-        marker.audit("spans") = marker.audit("quality")
       if (spanGated ne quality) marker.drop(quality)
 
       // 3. exact dedup against the corpus fingerprint index
@@ -734,22 +725,8 @@ object Curation {
         case None => Dedup.nearDupDelta(state.docs, exact, idCol, textCol,
           n = cfg.ngramN, threshold = cfg.nearDupJaccard)
       }
-      val pairs = lineageCut(cfg.maxEditRatio.fold(rawPairs) { maxRatio =>
-        val texts = state.docs.unionByName(exact.select(id, col(textCol)))
-        val ta = texts.select(id.as("id_a"), col(textCol).as("__ta"))
-        val tb = texts.select(id.as("id_b"), col(textCol).as("__tb"))
-        val bound = ceil(lit(maxRatio) *
-          greatest(length(col("__ta")), length(col("__tb"))).cast("double")).cast("int")
-        val dist = Bridge.column(
-          org.apache.spark.sql.catalyst.expressions.Levenshtein(
-            Bridge.expression(col("__ta")),
-            Bridge.expression(col("__tb")),
-            Some(Bridge.expression(bound))))
-        rawPairs.join(ta, "id_a").join(tb, "id_b")
-          .filter(dist >= 0 && dist.cast("double") <=
-            lit(maxRatio) * greatest(length(col("__ta")), length(col("__tb"))).cast("double"))
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-      })
+      val pairs = marker.lineageCut(editVerified(rawPairs,
+        state.docs.unionByName(exact.select(id, col(textCol))), idCol, textCol, cfg))
       // delta docs linked to a corpus doc drop outright; delta-only pairs
       // cluster and keep the min-id canonical, as the batch stage does
       val corpusIds = state.docs.select(id.as("__cid"))
@@ -771,22 +748,13 @@ object Curation {
         .join(canonical, Seq(idCol), "left_semi"))
       marker.drop(exact) // pairs checkpointed, clusters collected — exact is done
 
-      // 5. decontaminate (same canonicalization on the benchmark side)
-      val benchCanon = benchmark.select(col(idCol),
-        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC")).as(textCol))
-      val contaminated = Dedup.ngramContainmentPairs(deduped, benchCanon, idCol, textCol,
-        n = cfg.ngramN, threshold = cfg.contaminationMax)
-        .select(col("doc_id").as(idCol)).distinct()
-      val clean = marker.counted("clean", deduped.join(contaminated, Seq(idCol), "left_anti"))
+      // 5. decontaminate, 6-7. per-row split; pack CONTINUES the corpus's
+      // shard streams
+      val clean = marker.counted("clean",
+        decontaminated(deduped, benchmark, idCol, textCol, cfg))
       marker.drop(deduped)
-
-      // 6-7. per-row split; pack CONTINUES the corpus's shard streams
-      val split = marker(Split.assignSplit(clean, id, cfg.splits))(marker.splitCounts)
-      marker.drop(clean)
-      val trainTokens = split.filter(col("split") === lit(cfg.trainSplit))
-        .select(id, TextFns.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      val packed = marker(Pack.packSequences(trainTokens, idCol, "n_tokens",
-        cfg.seqBudget, cfg.packShards, shardOffsets = Some(state.shardOffsets)))(marker.packedStats)
+      val (split, packed) = splitPacked(marker, clean, idCol, textCol, cfg,
+        Some(state.shardOffsets))
       Stages(canon, quality, spanGated, exact, deduped, clean, split, packed,
         counts = marker.audit.toMap)
     }

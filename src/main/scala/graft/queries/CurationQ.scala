@@ -118,60 +118,39 @@ object CurationQ {
     * as in qc02 — still emitted, so a gate that silently activated or
     * deactivated flips the hash).
     */
-  private def stageCounts(st: Curation.Stages): DataFrame =
-    if (st.counts.nonEmpty) {
-      // persist-mode run: every number was already captured BY the
-      // materialization actions themselves (Stages.counts) — emit them as
-      // a literal frame, zero further Spark jobs. r7's shape re-counted
-      // all 12 rows as a union of aggregates over the cached frames: 11
-      // more actions per run, and the single biggest slice of qc01's
-      // 202.7 s cold bench price.
-      val spark = st.packed.sparkSession
-      val order = Seq("input" -> "00_input", "quality" -> "01_quality",
-        "spans" -> "01_spans", "exact" -> "02_exact", "neardup" -> "03_neardup",
-        "clean" -> "04_clean")
-      val head = order.map { case (k, label) => (label, Some(st.counts(k))) }
-      val splits = st.counts.keys.filter(_.startsWith("split_")).toSeq.sorted
-        .map(k => ("05_" + k, Some(st.counts(k))))
-      // packed_tokens key absent ⇔ empty pack ⇔ SQL sum is NULL
-      val tail = Seq(("06_pieces", Some(st.counts("pieces"))),
-        ("06_sequences", Some(st.counts("sequences"))),
-        ("06_packed_tokens", st.counts.get("packed_tokens")))
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(StructField("stage", StringType, nullable = false),
-        StructField("n", LongType, nullable = true)))
-      val rows = (head ++ splits ++ tail).map { case (s, n) =>
-        org.apache.spark.sql.Row(s, n.map(java.lang.Long.valueOf).orNull)
-      }
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } else {
-      // lazy run (no materialization happened): derive every row from the
-      // frames — one shared-lineage job per row, as before
-      def cnt(stage: String, df: DataFrame): DataFrame =
-        df.agg(count(lit(1)).cast("long").as("n"))
-          .select(lit(stage).as("stage"), col("n"))
-      cnt("00_input", st.input)
-        .unionByName(cnt("01_quality", st.quality))
-        .unionByName(cnt("01_spans", st.spanGated))
-        .unionByName(cnt("02_exact", st.exact))
-        .unionByName(cnt("03_neardup", st.deduped))
-        .unionByName(cnt("04_clean", st.clean))
-        .unionByName(st.split.groupBy(col("split"))
-          .agg(count(lit(1)).cast("long").as("n"))
-          .select(concat(lit("05_split_"), col("split")).as("stage"), col("n")))
-        .unionByName(cnt("06_pieces", st.packed))
-        .unionByName(st.packed.select("shard", "seq").distinct()
-          .agg(count(lit(1)).cast("long").as("n"))
-          .select(lit("06_sequences").as("stage"), col("n")))
-        .unionByName(st.packed.agg(sum(col("tok_len")).cast("long").as("n"))
-          .select(lit("06_packed_tokens").as("stage"), col("n")))
+  private def stageCounts(st: Curation.Stages): DataFrame = {
+    // every number was already captured BY the materializing boundaries
+    // (Stages.counts) — emit them as a literal frame, zero further Spark
+    // jobs. r7's shape re-counted all 12 rows as a union of aggregates
+    // over the cached frames: 11 more actions per run, and the single
+    // biggest slice of qc01's 202.7 s cold bench price.
+    require(st.counts.nonEmpty,
+      "stage counts need a materializing run (Cached or Stored), not a Lazy one")
+    val spark = st.packed.sparkSession
+    val order = Seq("input" -> "00_input", "quality" -> "01_quality",
+      "spans" -> "01_spans", "exact" -> "02_exact", "neardup" -> "03_neardup",
+      "clean" -> "04_clean")
+    val head = order.map { case (k, label) => (label, Some(st.counts(k))) }
+    val splits = st.counts.keys.filter(_.startsWith("split_")).toSeq.sorted
+      .map(k => ("05_" + k, Some(st.counts(k))))
+    // packed_tokens key absent ⇔ empty pack ⇔ SQL sum is NULL
+    val tail = Seq(("06_pieces", Some(st.counts("pieces"))),
+      ("06_sequences", Some(st.counts("sequences"))),
+      ("06_packed_tokens", st.counts.get("packed_tokens")))
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("stage", StringType, nullable = false),
+      StructField("n", LongType, nullable = true)))
+    val rows = (head ++ splits ++ tail).map { case (s, n) =>
+      org.apache.spark.sql.Row(s, n.map(java.lang.Long.valueOf).orNull)
     }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "qc01_curation" -> ((s, d) => {
       val (corpus, bench) = fixture(s, d)
-      // persist = true: the 11 count branches share one lineage; fully
-      // lazy, every branch re-executes the full upstream chain (~11× the
+      // Cached: the 11 count branches share one lineage; fully lazy,
+      // every branch re-executes the full upstream chain (~11× the
       // pipeline — the sf0.1 bench measured 115 s). The persist-at-every-
       // arrow mode materializes each stage once (the component loop that
       // runs during construction warms the caches). release = true drops
@@ -181,7 +160,7 @@ object CurationQ {
       // instead of 9 (the working-set mass that made this entry amplify
       // 2-3× under driver-side memory pressure, BENCH_r07/r08).
       stageCounts(Curation.stages(corpus, bench, "doc_id", "text", cfg,
-        persist = true, release = true))
+        Curation.Cached(release = true)))
     }),
 
     // The STORAGE twin: the same stages under the same config, but every
@@ -197,7 +176,7 @@ object CurationQ {
       val dir = java.nio.file.Files.createTempDirectory("graft_qc01s_").toString
       graft.sources.Tables.deleteOnExit(dir)
       stageCounts(Curation.stages(corpus, bench, "doc_id", "text", cfg,
-        persist = true, release = true, storageDir = Some(dir)))
+        Curation.Stored(dir)))
     }),
 
     // The INCREMENTAL twin: one day's delta through curateDelta against
@@ -209,7 +188,7 @@ object CurationQ {
     "qc02_curation_delta" -> ((s, d) => {
       val (_, bench, delta) = fixtureDelta(s, d)
       stageCounts(Curation.curateDelta(deltaState(s, d), delta, bench,
-        "doc_id", "text", cfgDelta, persist = true, release = true))
+        "doc_id", "text", cfgDelta, Curation.Cached(release = true)))
     }))
 
   /** The qc02 corpus state, built ONCE per fixture dir and PERSISTED to a
@@ -236,7 +215,8 @@ object CurationQ {
       // index (r17) — the delta entry serves pair generation from it, the
       // production form VERDICT r16 #4 asked for
       Curation.saveState(Curation.stateOf(
-        Curation.stages(corpusRaw, bench, "doc_id", "text", cfgDelta, persist = true),
+        Curation.stages(corpusRaw, bench, "doc_id", "text", cfgDelta,
+          Curation.Cached(release = false)),
         "doc_id", "text", ngramN = Some(cfgDelta.ngramN)), out, bucketIdCol = Some("doc_id"))
       out
     })

@@ -245,8 +245,7 @@ object Streams {
     // the same property from its per-stage persist; the fence is the
     // stream's equivalent, at zero runtime cost (identity passthrough).
     val canon = docs.withColumn(textCol,
-      Expressions.barrier(
-        TextFns.scrubPii(Expressions.normalizeText(col(textCol), "NFC"))))
+      Expressions.barrier(graft.pipeline.Curation.canonicalText(col(textCol))))
     // quality is computed ONCE, before the gate, and carried through as a
     // column: the gate filters on it and the output reports it — the
     // previous shape recomputed the full regex ensemble after the dedup

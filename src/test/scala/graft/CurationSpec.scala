@@ -127,10 +127,11 @@ class CurationSpec extends SparkSpec {
     // persist-at-arrow: the state frames are re-read many times below
     // (and inside curateDelta); lazy mode re-executes the batch chain per
     // action and turns this test into minutes
-    val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
+    val batch = Curation.stages(corpus, benchmark, "doc_id", "text",
+      mode = Curation.Cached(release = false))
     val state = Curation.stateOf(batch, "doc_id", "text")
     val inc = Curation.curateDelta(state, delta, benchmark, "doc_id", "text",
-      persist = true)
+      mode = Curation.Cached(release = false))
     val kept = inc.split.select("doc_id").as[Long].collect().toSet
     // 20 exact-vs-corpus, 21 near-vs-corpus, 23 near-in-delta (22 canonical),
     // 24 exact-in-delta, 25 contaminated, 26 gated -- survivors 22, 27
@@ -165,16 +166,17 @@ class CurationSpec extends SparkSpec {
 
   test("CorpusState round-trips through parquet: resumed delta identical to in-session state") {
     val dir = java.nio.file.Files.createTempDirectory("graft_state_rt").toString
-    val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
+    val batch = Curation.stages(corpus, benchmark, "doc_id", "text",
+      mode = Curation.Cached(release = false))
     val state = Curation.stateOf(batch, "doc_id", "text")
     Curation.saveState(state, dir)
     val reloaded = Curation.loadState(spark, dir)
     // every frame is a lazy storage scan — the corpus never sits on the driver
     assert(reloaded.docs.queryExecution.executedPlan.toString.contains("Scan parquet"))
     val fromMem = Curation.curateDelta(state, delta, benchmark, "doc_id", "text",
-      persist = true)
+      mode = Curation.Cached(release = false))
     val fromDisk = Curation.curateDelta(reloaded, delta, benchmark, "doc_id", "text",
-      persist = true)
+      mode = Curation.Cached(release = false))
     assert(fromDisk.split.select("doc_id").as[Long].collect().toSet ===
       fromMem.split.select("doc_id").as[Long].collect().toSet)
     // offset-continued packing resumes identically from the reloaded offsets
@@ -185,14 +187,15 @@ class CurationSpec extends SparkSpec {
 
   test("bucketed CorpusState: resumed delta identical to the loose-parquet round-trip") {
     val dir = java.nio.file.Files.createTempDirectory("graft_state_rtb").toString
-    val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
+    val batch = Curation.stages(corpus, benchmark, "doc_id", "text",
+      mode = Curation.Cached(release = false))
     val state = Curation.stateOf(batch, "doc_id", "text")
     Curation.saveState(state, dir, bucketIdCol = Some("doc_id"))
     val reloaded = Curation.loadState(spark, dir)
     val fromMem = Curation.curateDelta(state, delta, benchmark, "doc_id", "text",
-      persist = true)
+      mode = Curation.Cached(release = false))
     val fromDisk = Curation.curateDelta(reloaded, delta, benchmark, "doc_id", "text",
-      persist = true)
+      mode = Curation.Cached(release = false))
     assert(fromDisk.split.select("doc_id").as[Long].collect().toSet ===
       fromMem.split.select("doc_id").as[Long].collect().toSet)
     assert(fromDisk.packed.select("shard", "seq", "tok_len").collect().toSet ===
@@ -202,18 +205,39 @@ class CurationSpec extends SparkSpec {
 
   test("storage-mode stages: identical counts and frames to cache mode") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stages_store").toString
+    val lazyRun = Curation.stages(corpus, benchmark, "doc_id", "text")
     val cached = Curation.stages(corpus, benchmark, "doc_id", "text",
-      persist = true, release = true)
+      mode = Curation.Cached(release = true))
     val stored = Curation.stages(corpus, benchmark, "doc_id", "text",
-      persist = true, release = true, storageDir = Some(dir))
+      mode = Curation.Stored(dir))
     assert(stored.counts === cached.counts)
+    assert(lazyRun.counts.isEmpty)
     // the stage frames really live on storage (and are what downstream read)
     assert(new java.io.File(s"$dir/input.parquet").exists())
     assert(new java.io.File(s"$dir/packed.parquet").exists())
     assert(stored.packed.queryExecution.executedPlan.toString.contains("Scan parquet"))
-    // row-level equality on the terminal frames, not just counts
-    assert(stored.split.collect().toSet === cached.split.collect().toSet)
-    assert(stored.packed.collect().toSet === cached.packed.collect().toSet)
+    // row-level equality of every stage frame (as multisets), not just
+    // counts: the boundary policy moves no row in or out of any stage
+    def frames(st: Curation.Stages) = Seq("input" -> st.input, "quality" -> st.quality,
+      "spanGated" -> st.spanGated, "exact" -> st.exact, "deduped" -> st.deduped,
+      "clean" -> st.clean, "split" -> st.split, "packed" -> st.packed)
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().groupMapReduce(identity)(_ => 1)(_ + _)
+    def sameFrames(tag: String, a: Curation.Stages, b: Curation.Stages): Unit =
+      for (((name, fa), (_, fb)) <- frames(a).zip(frames(b)))
+        assert(bag(fa) === bag(fb), s"$tag: stage $name differs")
+    sameFrames("lazy vs cached", lazyRun, cached)
+    sameFrames("stored vs cached", stored, cached)
+    // the delta chain on the qc02 fixture: lazy and cached stage frames agree
+    val (corpusRaw, benchD, deltaD) = graft.queries.CurationQ.fixtureDelta(spark, sf)
+    val cfgD = graft.queries.CurationQ.cfgDelta
+    val state = Curation.stateOf(Curation.stages(corpusRaw, benchD, "doc_id", "text", cfgD,
+      Curation.Cached(release = false)), "doc_id", "text")
+    val cachedDelta = Curation.curateDelta(state, deltaD, benchD, "doc_id", "text", cfgD,
+      Curation.Cached(release = true))
+    val lazyDelta = Curation.curateDelta(state, deltaD, benchD, "doc_id", "text", cfgD)
+    assert(lazyDelta.counts.isEmpty && cachedDelta.counts("input") > 0)
+    sameFrames("delta lazy vs cached", lazyDelta, cachedDelta)
   }
 
   test("persist + release stages: a failing stage leaves no cache entry behind") {
@@ -227,7 +251,7 @@ class CurationSpec extends SparkSpec {
       .withColumn("text", when($"doc_id" === id, raise_error(lit("stage boom"))).otherwise($"text"))
     for ((docs, bench) <- Seq((boom(corpus, 2L), benchmark), (corpus, boom(benchmark, 100L)))) {
       val e = intercept[Exception](Curation.stages(docs, bench, "doc_id", "text",
-        persist = true, release = true))
+        mode = Curation.Cached(release = true)))
       assert(raisedWith(e, "stage boom"), e.toString)
       assert(cachedEntries === before)
     }
@@ -246,11 +270,11 @@ class CurationSpec extends SparkSpec {
     // uninterrupted reference run
     val refDir = java.nio.file.Files.createTempDirectory("graft_resume_ref").toString
     val ref = Curation.stages(corpus, benchmark, "doc_id", "text",
-      persist = true, release = true, storageDir = Some(refDir))
+      mode = Curation.Stored(refDir))
     // the run that "crashes" after the exact stage
     val crashDir = java.nio.file.Files.createTempDirectory("graft_resume_crash").toString
     Curation.stages(corpus, benchmark, "doc_id", "text",
-      persist = true, release = true, storageDir = Some(crashDir)): Unit
+      mode = Curation.Stored(crashDir)): Unit
     // downstream of the crash point: gone entirely
     for (s <- Seq("neardup", "pairs", "split", "packed")) {
       val d = new java.io.File(s"$crashDir/$s.parquet")
@@ -267,7 +291,7 @@ class CurationSpec extends SparkSpec {
     assert(before.values.forall(_.nonEmpty))
 
     val resumed = Curation.stages(corpus, benchmark, "doc_id", "text",
-      persist = true, release = true, storageDir = Some(crashDir), resume = true)
+      mode = Curation.Stored(crashDir, resume = true))
     // 1. bit-identical terminal frames + packed stats vs the uninterrupted run
     assert(resumed.counts === ref.counts)
     assert(resumed.split.collect().toSet === ref.split.collect().toSet)
@@ -287,7 +311,8 @@ class CurationSpec extends SparkSpec {
 
   test("state store mode switch: plain save over a bucketed dir clears marker + tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft_state_ms").toString
-    val batch = Curation.stages(corpus, benchmark, "doc_id", "text", persist = true)
+    val batch = Curation.stages(corpus, benchmark, "doc_id", "text",
+      mode = Curation.Cached(release = false))
     val state = Curation.stateOf(batch, "doc_id", "text")
     val indexed = state.copy(nearDupIndex =
       Some(graft.operators.Dedup.nearDupIndexOf(state.docs, "doc_id", "text", 3)))
@@ -358,7 +383,7 @@ class CurationSpec extends SparkSpec {
       (43L, "a plain corpus document with enough ordinary words to clear every gate")
     ).toDF("doc_id", "text")
     val batch = Curation.stages(corpus, benchmark, "doc_id", "text", spanCfg,
-      persist = true)
+      mode = Curation.Cached(release = false))
     assert(batch.split.select("doc_id").as[Long].collect().toSet ===
       Set(41L, 42L, 43L))
     val state = Curation.stateOf(batch, "doc_id", "text")
@@ -370,7 +395,7 @@ class CurationSpec extends SparkSpec {
       (52L, "fresh unrelated sentence with sufficient ordinary words to pass cleanly")
     ).toDF("doc_id", "text")
     val inc = Curation.curateDelta(state, delta, benchmark, "doc_id", "text",
-      spanCfg, persist = true)
+      spanCfg, Curation.Cached(release = false))
     assert(inc.split.select("doc_id").as[Long].collect().toSet === Set(52L))
     // shipped corpus docs are never re-judged: the state is untouched input
     assert(state.docs.count() === 3)

@@ -261,14 +261,16 @@ class PlanSpec extends SparkSpec {
       }
     val (corpus, bench) = graft.queries.CurationQ.fixture(spark, sf)
     val batch = graft.pipeline.Curation.stages(corpus, bench, "doc_id", "text",
-      graft.queries.CurationQ.cfg, persist = true)
+      graft.queries.CurationQ.cfg, graft.pipeline.Curation.Cached(release = false))
     gateStages("qc01", batch)
     val (corpusRaw, benchD, delta) = graft.queries.CurationQ.fixtureDelta(spark, sf)
     val state = graft.pipeline.Curation.stateOf(
       graft.pipeline.Curation.stages(corpusRaw, benchD, "doc_id", "text",
-        graft.queries.CurationQ.cfgDelta, persist = true), "doc_id", "text")
+        graft.queries.CurationQ.cfgDelta, graft.pipeline.Curation.Cached(release = false)),
+      "doc_id", "text")
     gateStages("qc02", graft.pipeline.Curation.curateDelta(state, delta, benchD,
-      "doc_id", "text", graft.queries.CurationQ.cfgDelta, persist = true))
+      "doc_id", "text", graft.queries.CurationQ.cfgDelta,
+      graft.pipeline.Curation.Cached(release = false)))
   }
 
   test("composed pipeline: dims broadcast, facts never sort-merge, no cartesian") {
